@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -43,6 +44,16 @@ HEADLINE = [
     "q5_local_supplier_volume",
     "t_session_window",
 ]
+
+# round records only: BENCH_r11_c8.json and the like are side
+# records, not rounds
+_ROUND_FILE = re.compile(r"^BENCH_r(\d+)\.json$")
+
+
+def next_round(names) -> int:
+    """The round after the newest ``BENCH_r{N}.json`` among ``names``."""
+    return max((int(m[1]) for m in map(_ROUND_FILE.match, names) if m), default=0) + 1
+
 
 # Round-2 additions, timed separately so "value"/"queries" stay
 # comparable with BENCH_r01's 23-query headline set.
@@ -348,10 +359,6 @@ def main() -> None:
         "extended_total_sec": round(sum(extended.values()), 3),
         "extended": extended,
         "host_canary_sec": canary_sec,
-        # cpu = the historical host_canary_sec series; scan_shuffle /
-        # driver_meta model the IO- and metadata-bound query classes
-        # the cpu canary proved blind to (r9 bisect, PLANS.md)
-        "host_canaries": canaries,
         # queries auto-rerun after tripping the >1.5x-vs-prior-round
         # check with a <1.2x cpu canary (transient host stalls; see
         # comment at the rerun loop). Empty = nothing tripped.
@@ -364,6 +371,12 @@ def main() -> None:
         "operator_phases": __import__(
             "news_lakehouse_spark.queries", fromlist=["PHASE_TIMINGS"]
         ).PHASE_TIMINGS,
+        # cpu = the historical host_canary_sec series; scan_shuffle /
+        # driver_meta model the IO- and metadata-bound query classes
+        # the cpu canary proved blind to (r9 bisect, PLANS.md). Last
+        # key, so a record that keeps only the line's tail keeps all
+        # three.
+        "host_canaries": canaries,
     }
     # the contract line is the FIRST and ONLY stdout of this process,
     # flushed immediately (r11 verdict #2: BENCH_r10's stored stdout
@@ -379,12 +392,7 @@ def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     rnd = os.environ.get("SPARK_GRAFT_ROUND")
     if rnd is None:
-        recorded = [
-            int(f[len("BENCH_r"):-len(".json")])
-            for f in os.listdir(here)
-            if f.startswith("BENCH_r") and f.endswith(".json")
-        ]
-        rnd = str(max(recorded, default=0) + 1)
+        rnd = str(next_round(os.listdir(here)))
     with open(os.path.join(here, f"BENCH_LOCAL_r{rnd}.json"), "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
 

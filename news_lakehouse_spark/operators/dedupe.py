@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 from news_lakehouse_spark.operators.iterstate import (
     LineageTruncator,
     truncate_lineage,
+    truncate_observed,
 )
+from news_lakehouse_spark.session import borrowed_conf
 
 # Deterministic affine-permutation parameters. p = 2^31-1 keeps
 # h (< p) * a (< p) + b below 2^62 — no int64 overflow in column math.
@@ -682,6 +684,13 @@ def cross_corpus_contamination(
     )
 
 
+# no AQE, no broadcasts: a propagation round plans to one Spark job
+_STATIC_PLANS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -696,13 +705,26 @@ def connected_components(
 
     ``method="propagate"`` (default) — min-label propagation: each
     round, every node takes the minimum of its own label and its
-    neighbors' labels, until a fixpoint. Rounds are O(graph diameter);
-    near-dup graphs are unions of small cliques (diameter 1-2), so
-    convergence is 2-3 rounds in practice — the regime where plain
-    propagation beats the fancier alternatives. Each iteration is one
-    join + one groupBy on the label frame (never an all-pairs
-    expansion), with iterstate.truncate_lineage cutting each round's plan
-    the convergence check is a limit(1) probe.
+    neighbors' labels, until a fixpoint. Rounds are O(graph diameter):
+    a clique takes one round, a k-document duplicate path k-1 (the
+    benchmark's 7-document paths take 6) — fine for near-dup graphs,
+    whose clusters are small; long chains belong to ``star``. Each
+    round is one join + one groupBy on the label frame (never an
+    all-pairs expansion), materialized by a LineageTruncator
+    checkpoint that also counts, through an observation, the nodes
+    whose label fell — the convergence test costs no extra job.
+
+    The rounds run with AQE and broadcast joins off (the caller's
+    settings come back on every exit). The edge cache is hash-
+    partitioned on the join key and each round's checkpoint keeps its
+    id partitioning, so a round is ONE Spark job with one shuffle; with
+    AQE on, each shuffle stage and each broadcast of the edge cache
+    would be a job of its own. In exchange the loop gives up AQE's
+    partition coalescing and skew splitting on node-sized frames. The
+    edge cache is filled, and the first labels taken, before the
+    switch, so a lazy ``pairs`` plan (MinHash) still runs with AQE; the
+    returned frame reads the last checkpoint, so nothing planned later
+    depends on the settings. ``star`` keeps AQE (see iterstate).
 
     ``method="star"`` — alternating large-star/small-star (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC'14):
@@ -727,51 +749,51 @@ def connected_components(
     edges = (
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .unionByName(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
+        # hashed on the rounds' join key: their edge side never shuffles
+        .repartition(int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")), "b")
         .distinct()
         .persist()
     )
-    # label = current best-known component min per node
-    labels = edges.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("lbl"))
-    labels = labels.select(F.col("a").alias("id"), F.least("lbl", "id").alias("lbl"))
-    # keeps the 2 newest round checkpoints (the convergence test below
-    # reads rounds n and n-1 together), deletes older — bounded ckpt FS
+    # keeps the 2 newest round checkpoints, deletes older — bounded ckpt FS
     _ckpt = LineageTruncator()
-    for _ in range(max_iters):
-        # propagate: node's new label = min(own, min over neighbors' labels)
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("id", "b").withColumnRenamed("lbl", "nl"), "b")
-            .groupBy("a")
-            .agg(F.min("nl").alias("nbr_lbl"))
+    try:
+        # label = current best-known component min per node; this
+        # materialization also fills the edge cache while AQE is on
+        labels = _ckpt(
+            edges.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("lbl"))
+            .select(F.col("a").alias("id"), "lbl")
         )
-        new_labels = (
-            labels.join(nbr_min.withColumnRenamed("a", "id"), "id", "left")
-            .select(
-                "id",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))).alias("lbl"),
-            )
-            .transform(_ckpt)  # truncate the iterative lineage
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # silently returning split components would let dedup keep
-        # several "survivors" from one duplicate cluster
+        with borrowed_conf(pairs.sparkSession, **_STATIC_PLANS):
+            for _ in range(max_iters):
+                # propagate: node's new label = min(own, min over neighbors' labels)
+                nbr_min = (
+                    edges.join(labels.select(F.col("id").alias("b"), F.col("lbl").alias("nl")), "b")
+                    .groupBy("a")
+                    .agg(F.min("nl").alias("nbr_lbl"))
+                )
+                new_labels, changed = truncate_observed(
+                    labels.join(nbr_min.withColumnRenamed("a", "id"), "id", "left").select(
+                        "id",
+                        F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))).alias("lbl"),
+                        (F.col("nbr_lbl") < F.col("lbl")).cast("int").alias("chg"),
+                    ),
+                    F.sum("chg"),  # nodes whose label fell this round
+                    _ckpt,
+                )
+                labels = new_labels.drop("chg")
+                if not changed:  # None: no nodes at all
+                    break
+            else:
+                # silently returning split components would let dedup keep
+                # several "survivors" from one duplicate cluster
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iters} "
+                    "iterations (graph diameter exceeds the round budget); "
+                    'raise max_iters or switch to method="star" '
+                    "(large-star/small-star, O(log^2 n) rounds)"
+                )
+    finally:
         edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} "
-            "iterations (graph diameter exceeds the round budget); "
-            'raise max_iters or switch to method="star" '
-            "(large-star/small-star, O(log^2 n) rounds)"
-        )
-    edges.unpersist()
     return labels.select(F.col("id"), F.col("lbl").alias("component"))
 
 

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from news_lakehouse_spark.operators.iterstate import (
     LineageTruncator,
     truncate_lineage,
+    truncate_observed,
 )
 
 __all__ = ["bfs_distances", "pagerank", "triangle_stats"]
@@ -349,9 +350,10 @@ def bfs_distances(
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(hop).cast("int").alias("dist"))
-            .transform(truncate_lineage)
         )
-        if nxt.limit(1).count() == 0:
+        # the frontier's size is observed while it is materialized
+        nxt, n_new = truncate_observed(nxt, F.count(F.lit(1)))
+        if n_new == 0:
             break
         visited = visited.unionByName(nxt)
         frontier = nxt

@@ -18,7 +18,9 @@ Scale posture (local[N] test box vs 1000-executor cluster):
 
 from __future__ import annotations
 
+import functools
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -70,31 +72,39 @@ def build_session(
     return spark
 
 
+@contextmanager
+def borrowed_conf(spark: SparkSession, **conf: str):
+    """Set session confs for the block, then restore the caller's
+    values — explicitly-set ones come back, unset ones are unset again
+    — so nothing leaks into later queries on a shared session (r7
+    verdict #4). Only safe when nothing planned inside the block runs
+    lazily after it under the borrowed confs."""
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, p in prior.items():
+            if p is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, p)
+
+
 def borrows_session_conf(**conf: str):
     """Decorator for runners that need a session conf during a FULLY
     DRAINED operation (Trigger.AvailableNow streams that terminate
-    inside the call): set the confs for the call, restore the caller's
-    values — explicitly-set ones come back, unset ones are unset again
-    — so nothing leaks into later queries on a shared session (r7
-    verdict #4). Only safe when the function's result does not lazily
-    depend on the conf (memory-sink tables are materialized; a lazy
-    parquet scan would NOT be)."""
-    import functools
+    inside the call): the call runs under :func:`borrowed_conf`. Only
+    safe when the function's result does not lazily depend on the conf
+    (memory-sink tables are materialized; a lazy parquet scan would
+    NOT be)."""
 
     def deco(fn):
         @functools.wraps(fn)
         def wrapper(spark, *args, **kwargs):
-            prior = {k: spark.conf.get(k, None) for k in conf}
-            for k, v in conf.items():
-                spark.conf.set(k, v)
-            try:
+            with borrowed_conf(spark, **conf):
                 return fn(spark, *args, **kwargs)
-            finally:
-                for k, p in prior.items():
-                    if p is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, p)
         return wrapper
 
     return deco

@@ -200,12 +200,14 @@ def test_reliable_checkpoint_mode_bit_identical(spark, tmp_path):
     fault-tolerant mode a multi-hour cluster run needs — and the
     results are bit-identical across both modes."""
     from news_lakehouse_spark.operators.dedupe import connected_components
+    from news_lakehouse_spark.operators.graph import bfs_distances
 
     edges = [(1, 2), (2, 3), (3, 1), (1, 4), (2, 4), (3, 4), (7, 8)]
     df = spark.createDataFrame(edges, "src long, dst long")
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edges], "id_a long, id_b long"
     )
+    seeds = spark.createDataFrame([(7,), (1,)], "node long")
 
     local_pr = sorted(
         tuple(r) for r in pagerank(df, iterations=5).collect()
@@ -214,6 +216,10 @@ def test_reliable_checkpoint_mode_bit_identical(spark, tmp_path):
         tuple(r)
         for r in connected_components(pairs, method="star").collect()
     )
+    # the propagate rounds and BFS hops read their convergence counts
+    # from an observation on the checkpoint: it must arrive in both modes
+    local_prop = sorted(tuple(r) for r in connected_components(pairs).collect())
+    local_bfs = sorted(tuple(r) for r in bfs_distances(df, seeds, max_hops=5).collect())
 
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
@@ -226,6 +232,8 @@ def test_reliable_checkpoint_mode_bit_identical(spark, tmp_path):
             tuple(r)
             for r in connected_components(pairs, method="star").collect()
         )
+        rel_prop = sorted(tuple(r) for r in connected_components(pairs).collect())
+        rel_bfs = sorted(tuple(r) for r in bfs_distances(df, seeds, max_hops=5).collect())
         # the reliable mode actually wrote checkpoint state
         import os
 
@@ -234,6 +242,8 @@ def test_reliable_checkpoint_mode_bit_identical(spark, tmp_path):
         sc.setCheckpointDir(None)
     assert rel_pr == local_pr
     assert rel_cc == local_cc
+    assert rel_prop == local_prop == local_cc
+    assert rel_bfs == local_bfs
 
 
 def test_truncator_bounds_checkpoint_storage(spark, tmp_path):

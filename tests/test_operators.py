@@ -608,6 +608,81 @@ def test_connected_components_raises_when_budget_exhausted(spark):
     assert {r["component"] for r in comp.collect()} == {0}
 
 
+def test_connected_components_one_job_per_round(spark):
+    """A propagation round is one Spark job: its convergence count is
+    observed on the round's own checkpoint, and the loop runs without
+    AQE's per-stage jobs. A 7-node path takes 6 rounds; the whole call
+    plus reading the result stays within 2 jobs a round."""
+    from news_lakehouse_spark.operators.dedupe import connected_components
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "id_a long, id_b long"
+    )
+    group = "test_connected_components_one_job_per_round"
+    sc.setJobGroup(group, group)
+    try:
+        comp = connected_components(pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(tuple(r) for r in comp) == [(i, 0) for i in range(7)]
+    rounds = 6
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * rounds
+
+
+def test_connected_components_restores_session_conf(spark):
+    """The propagate loop turns AQE and broadcast joins off only for
+    its own rounds: an explicit setting comes back and an unset one is
+    unset again, after a normal return and after the max_iters error."""
+    import pytest
+
+    from news_lakehouse_spark.operators.dedupe import connected_components
+
+    aqe, bcast = "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold"
+    saved = {k: spark.conf.get(k, None) for k in (aqe, bcast)}
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    try:
+        for prior in ("true", "false", None):
+            if prior is None:
+                spark.conf.unset(aqe)
+            else:
+                spark.conf.set(aqe, prior)
+            want = {aqe: prior, bcast: spark.conf.get(bcast, None)}
+            comp = connected_components(pairs).collect()
+            assert {r["component"] for r in comp} == {0}
+            assert {k: spark.conf.get(k, None) for k in want} == want
+            with pytest.raises(RuntimeError, match="did not converge"):
+                connected_components(pairs, max_iters=2)
+            assert {k: spark.conf.get(k, None) for k in want} == want
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_connected_components_empty_pairs(spark):
+    """No pairs: the first round observes no rows (a NULL sum), which
+    reads as converged instead of blocking on the observation."""
+    import threading
+
+    from news_lakehouse_spark.operators.dedupe import connected_components
+
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    out: list = []
+    t = threading.Thread(
+        target=lambda: out.append(connected_components(pairs).collect()),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert out == [[]]
+
+
 def test_ann_recall_uses_actual_exact_size(spark):
     from news_lakehouse_spark.operators.similarity import ann_recall_at_k
 
