@@ -5,7 +5,6 @@ from news_lakehouse_spark.operators.windows import (  # noqa: F401
 from news_lakehouse_spark.operators.merge import (  # noqa: F401
     merge_insert_only,
     merge_upsert,
-    upsert_parquet_table,
 )
 from news_lakehouse_spark.operators.dedupe import (  # noqa: F401
     exact_dedupe,

@@ -19,27 +19,16 @@ The MERGE_CARDINALITY_VIOLATION guard the reference implements with
 dropna+dropDuplicates before every merge (b2s:426-446) is enforced here
 by deduping the source on the merge keys first.
 
-Scale notes: the anti join shuffles both sides on the merge keys — at
-100 TB this is the dominant cost, so `upsert_parquet_table` restricts
-the rewrite to affected partitions (dynamic partition overwrite) when a
-partition column is declared; with small deltas Catalyst broadcasts the
-source side of the anti join automatically.
-
-Backend probe (re-checked every round): neither the `delta-spark`
-package nor any Delta/Iceberg runtime jar exists in this environment
-(no pip/ivy/maven access), so an ACID `DeltaTable.merge` /
-`MERGE INTO` backend cannot be wired here. What the parquet emulation
-consequently lacks vs the reference's Iceberg tables: concurrent-writer
-snapshot isolation, time travel, and metadata-level schema evolution.
-On a cluster with delta-spark installed, `upsert_parquet_table` is the
-single seam to swap: same (target, source, keys, partition_by)
-signature as `DeltaTable.merge(...).whenMatchedUpdateAll()
-.whenNotMatchedInsertAll()`.
+These are pure DataFrame -> DataFrame rewrites. Materializing one is
+the table layer's job: ``VersionedParquetTable.merge``
+(sources/transaction.py) applies them to the affected files only and
+publishes the result as one atomic manifest commit. With small deltas
+Catalyst broadcasts the source side of the anti join automatically.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -51,50 +40,6 @@ def _guard_source(source: DataFrame, keys: list[str], order_by: list[Column] | N
 
         return dedupe_latest(guarded, keys, order_by)
     return guarded.dropDuplicates(keys)
-
-
-MAX_PARTITION_OR_CHAIN = 1000
-
-
-def filter_to_partitions(
-    target: DataFrame,
-    parts: list[dict],
-    partition_by: list[str],
-    max_or_chain: int = MAX_PARTITION_OR_CHAIN,
-) -> DataFrame:
-    """Restrict ``target`` to rows whose partition tuple is in ``parts``
-    (null-safe on every column).
-
-    Up to ``max_or_chain`` partitions this compiles a literal OR-chain
-    predicate — the form Catalyst pushes into partition pruning. Past
-    it (a high-cardinality partition scheme: thousands of dates ×
-    sources), a literal predicate bloats the plan tree and analysis
-    time quadratically, so we switch to a broadcast left-semi join on
-    the partition columns: same rows, one broadcast of a tiny
-    partition-tuple table, and eligible for dynamic partition pruning
-    instead of static.
-    """
-    if not parts:
-        return target.limit(0)
-    if len(parts) <= max_or_chain:
-        cond = None
-        for p in parts:
-            c = None
-            for k in partition_by:
-                e = F.col(k).eqNullSafe(F.lit(p[k]))
-                c = e if c is None else (c & e)
-            cond = c if cond is None else (cond | c)
-        return target.filter(cond)
-    spark = target.sparkSession
-    schema = target.select(*partition_by).schema
-    parts_df = spark.createDataFrame(
-        [tuple(p[c] for c in partition_by) for p in parts], schema
-    )
-    join_cond = None
-    for c in partition_by:
-        e = target[c].eqNullSafe(parts_df[c])
-        join_cond = e if join_cond is None else (join_cond & e)
-    return target.join(F.broadcast(parts_df), join_cond, "left_semi")
 
 
 def _check_add_column_only(target: DataFrame, source: DataFrame) -> None:
@@ -152,66 +97,6 @@ def merge_insert_only(
     src = _guard_source(source.select(*target.columns), keys, None)
     new_rows = src.join(target.select(*keys), on=keys, how="left_anti")
     return target.unionByName(new_rows)
-
-
-def delete_rows(
-    spark: SparkSession,
-    path: str,
-    keys: list[str],
-    delete_keys: DataFrame,
-    partition_by: list[str] | None = None,
-) -> int:
-    """MERGE ... WHEN MATCHED DELETE — keyed hard delete from a parquet
-    table (the right-to-be-forgotten primitive a training-data store
-    needs; Iceberg expresses it as a MERGE delete branch).
-
-    Rewrites only the partitions that contain matching keys when
-    ``partition_by`` is set — the delete set broadcasts to locate them,
-    the rest of the table is untouched. Returns the number of rows
-    removed. Idempotent: re-deleting the same keys removes 0 rows.
-    """
-    if not path_exists(spark, path):
-        return 0
-    target = spark.read.option("mergeSchema", "true").parquet(path)
-    dk = delete_keys.select(*keys).distinct()
-
-    if partition_by:
-        hit_parts = (
-            target.join(F.broadcast(dk), on=keys, how="left_semi")
-            .select(*partition_by)
-            .distinct()
-        )
-        parts = [r.asDict() for r in hit_parts.collect()]
-        if not parts:
-            return 0
-        affected = filter_to_partitions(target, parts, partition_by)
-        kept = affected.join(F.broadcast(dk), on=keys, how="left_anti")
-        removed = affected.count() - kept.count()
-        staged = kept.localCheckpoint(eager=True)
-        prior_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            staged.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior_mode)
-        written = {
-            tuple(r.asDict()[c] for c in partition_by)
-            for r in staged.select(*partition_by).distinct().collect()
-        }
-        emptied = [
-            p for p in parts if tuple(p[c] for c in partition_by) not in written
-        ]
-        if emptied:
-            _delete_partition_dirs(spark, path, partition_by, emptied)
-        return removed
-
-    kept = target.join(F.broadcast(dk), on=keys, how="left_anti")
-    removed = target.count() - kept.count()
-    if removed == 0:
-        # no-op delete must not rewrite (and risk) the whole table
-        return 0
-    kept.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-    return removed
 
 
 def scd2_merge(
@@ -295,145 +180,3 @@ def scd2_merge(
         .unionByName(existing.select(*out_cols))
         .unionByName(first_version)
     )
-
-
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence probe (works on HDFS / object stores).
-
-    Used instead of try/except around spark.read: a bare except would
-    treat ANY read failure (corrupt footer, transient FS error) as
-    "table does not exist" and overwrite good data with a delta."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def _delete_partition_dirs(
-    spark: SparkSession,
-    path: str,
-    partition_by: list[str],
-    parts: list[dict],
-) -> None:
-    """Remove partition directories emptied by an upsert (keys moved out).
-
-    Uses the Hadoop FileSystem API so the same code path works on HDFS /
-    object stores, and Spark's own path-name escaping so values with
-    special characters resolve to the directory Spark wrote.
-    """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    try:
-        esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    except Exception:  # pragma: no cover - fallback for API drift
-        esc = lambda s: s  # noqa: E731
-    for p in parts:
-        # Spark writes NULL partition values to __HIVE_DEFAULT_PARTITION__,
-        # not str(None) — match it or the emptied dir survives deletion
-        suffix = "/".join(
-            f"{c}={'__HIVE_DEFAULT_PARTITION__' if p[c] is None else esc(str(p[c]))}"
-            for c in partition_by
-        )
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{suffix}")
-        fs = jpath.getFileSystem(hconf)
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
-
-
-def upsert_parquet_table(
-    spark: SparkSession,
-    source: DataFrame,
-    path: str,
-    keys: list[str],
-    partition_by: list[str] | None = None,
-    insert_only: bool = False,
-    order_by: list[Column] | None = None,
-    evolve_schema: bool = False,
-) -> None:
-    """Materialized upsert into a parquet table directory.
-
-    First write creates the table. Subsequent writes read the current
-    snapshot, apply merge semantics, and rewrite — only the partitions
-    containing affected keys when ``partition_by`` is set (the
-    dynamic-partition-overwrite analog of an Iceberg copy-on-write
-    MERGE commit).
-
-    ``evolve_schema`` adds source-only columns to the table (the
-    add-column half of Iceberg schema evolution; existing rows read
-    back null). For partitioned tables only affected partitions are
-    rewritten with the widened schema — reads then need parquet
-    ``mergeSchema`` (this function always reads with it).
-    """
-    exists = path_exists(spark, path)
-    if exists:
-        target = spark.read.option("mergeSchema", "true").parquet(path)
-
-    if not exists:
-        merged = _guard_source(source, keys, order_by)
-        writer = merged.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        return
-
-    if partition_by:
-        # Affected partitions = partitions the source writes into UNION
-        # partitions where the source's merge keys currently live in the
-        # target. The second set matters when an update moves a key to a
-        # different partition: the old row must be anti-joined away and
-        # its (now smaller) partition rewritten, or the key would exist
-        # twice across partitions — Iceberg MERGE has no such gap, so
-        # neither do we. Both collects are bounded by partition count
-        # (dates), never row count.
-        src_keys = source.dropna(subset=keys).select(*keys).distinct()
-        # one distinct over the union (not per side + union again):
-        # same set, two fewer aggregation stages per merge
-        new_parts = source.select(*partition_by)
-        old_parts = target.join(
-            F.broadcast(src_keys), on=keys, how="left_semi"
-        ).select(*partition_by)
-        parts = [
-            r.asDict()
-            for r in new_parts.unionByName(old_parts).distinct().collect()
-        ]
-        cond = None
-        for p in parts:
-            c = None
-            for k, v in p.items():
-                e = F.col(k).eqNullSafe(F.lit(v))
-                c = e if c is None else (c & e)
-            cond = c if cond is None else (cond | c)
-        affected_target = target.filter(cond) if cond is not None else target.limit(0)
-        merged = (
-            merge_insert_only(affected_target, source, keys, evolve_schema=evolve_schema)
-            if insert_only
-            else merge_upsert(
-                affected_target, source, keys, order_by, evolve_schema=evolve_schema
-            )
-        )
-        # localCheckpoint breaks the read-from/write-to-same-path cycle.
-        staged = merged.localCheckpoint(eager=True)
-        prior_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            staged.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior_mode)
-        # Dynamic overwrite only rewrites partitions present in the
-        # output — a partition emptied by a key moving out keeps its
-        # stale files. Drop those directories explicitly.
-        written = {
-            tuple(r.asDict()[c] for c in partition_by)
-            for r in staged.select(*partition_by).distinct().collect()
-        }
-        emptied = [p for p in parts if tuple(p[c] for c in partition_by) not in written]
-        if emptied:
-            _delete_partition_dirs(spark, path, partition_by, emptied)
-    else:
-        merged = (
-            merge_insert_only(target, source, keys, evolve_schema=evolve_schema)
-            if insert_only
-            else merge_upsert(target, source, keys, order_by, evolve_schema=evolve_schema)
-        )
-        # Parquet can't overwrite a path being read → stage via local checkpoint.
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)

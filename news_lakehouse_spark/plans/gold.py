@@ -276,19 +276,23 @@ def write_gold_tables(
     analog of the reference's silver→gold job (gcs_silver_to_gold.py),
     with its per-ETL metrics wrapper (airflow/config/
     metrics_utils.py:9-55): one timed duration/rows/status record per
-    gold table plus one for the whole job. Row counts come from a
-    read-back count over the files just written (footer-bounded scan),
-    never a second pass over the build plan."""
+    gold table plus one for the whole job. Each table is a
+    ``VersionedParquetTable`` and the rebuild lands as one overwrite
+    commit, so a crash mid-write leaves the previous snapshot readable.
+    Row counts come from a read-back count over the snapshot just
+    committed (footer-bounded scan), never a second pass over the
+    build plan."""
     from news_lakehouse_spark.metrics import pipeline_metrics
+    from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 
     written: dict[str, int] = {}
     with pipeline_metrics("write_gold_tables") as whole:
         tables = {**build_gold_dimensions(silver), **build_gold_facts(silver)}
         for name, df in tables.items():
             with pipeline_metrics(f"gold_{name}", table=name) as m:
-                path = f"{gold_root}/{name}"
-                df.write.mode("overwrite").parquet(path)
-                written[name] = m.records = spark.read.parquet(path).count()
+                table = VersionedParquetTable(spark, f"{gold_root}/{name}")
+                table.write(df)
+                written[name] = m.records = table.read().count()
         whole.records = sum(written.values())
     return written
 

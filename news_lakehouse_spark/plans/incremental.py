@@ -13,12 +13,16 @@ Semantics per table kind:
   activity, interaction detail): DELETE-AND-INSERT scoped to the
   changed articles. Upsert alone is wrong for child-grain facts — an
   article whose keyword was REMOVED would keep the stale
-  (article, keyword) row; deleting the changed articles' whole fact
-  slice first makes the refresh idempotent and removal-correct.
+  (article, keyword) row; replacing the changed articles' whole fact
+  slice makes the refresh idempotent and removal-correct. The table
+  minus that slice, plus the new slice, is published as ONE overwrite
+  commit, so a crash leaves the previous snapshot readable.
 - Dimensions: rebuilt from the delta and MERGEd by natural key
   (insert-or-update); dims here are pure functions of the natural key
   so rows for unchanged members are untouched. dim_date is
   insert-only (calendar attributes never change).
+
+Every gold table is a ``VersionedParquetTable`` (sources/transaction.py).
 
 Equivalence contract (pinned by tests/test_incremental.py):
 incremental refresh after each batch == full rebuild over the union,
@@ -32,28 +36,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from news_lakehouse_spark.functions.keys import surrogate_key_safe
-from news_lakehouse_spark.operators.merge import upsert_parquet_table
 from news_lakehouse_spark.plans.gold import (
     build_gold_dimensions,
     build_gold_facts,
 )
+from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 
-#: merge keys per gold table
-FACT_KEYS: dict[str, list[str]] = {
-    "fact_article_publication": ["ArticleKey"],
-    "fact_article_keyword": ["ArticleKey", "KeywordKey"],
-    "fact_article_reference": ["ArticleKey", "ReferenceSourceKey"],
-    "fact_top_comment_activity": ["CommentKey"],
-    "fact_top_comment_interaction_detail": ["CommentInteractionKey"],
-}
-#: the column scoping each fact to its article slice
-FACT_SCOPE: dict[str, str] = {
-    "fact_article_publication": "ArticleKey",
-    "fact_article_keyword": "ArticleKey",
-    "fact_article_reference": "ArticleKey",
-    "fact_top_comment_activity": "ArticleKey",
-    "fact_top_comment_interaction_detail": "ArticleKey",
-}
+#: merge keys per gold dimension
 DIM_KEYS: dict[str, list[str]] = {
     "dim_date": ["DateKey"],
     "dim_author": ["AuthorKey"],
@@ -63,34 +52,6 @@ DIM_KEYS: dict[str, list[str]] = {
     "dim_reference_source": ["ReferenceSourceKey"],
     "dim_interaction_type": ["InteractionTypeKey"],
 }
-
-
-def _replace_scope(
-    spark: SparkSession,
-    source: DataFrame,
-    path: str,
-    scope_col: str,
-    scope_keys: DataFrame,
-) -> None:
-    """Delete target rows whose ``scope_col`` is in ``scope_keys``,
-    then insert ``source``. The scope side broadcasts (it is the
-    changed-article set — delta-sized), so the target is one anti-join
-    scan, never shuffled on its own size."""
-    from news_lakehouse_spark.operators.merge import path_exists
-
-    if path_exists(spark, path):
-        # a real read/analysis failure must PROPAGATE: swallowing it
-        # would overwrite the accumulated table with just this delta
-        target = spark.read.parquet(path)
-        kept = target.join(
-            F.broadcast(scope_keys.withColumnRenamed(scope_keys.columns[0], scope_col)),
-            scope_col,
-            "left_anti",
-        )
-        merged = kept.unionByName(source)
-    else:  # first run — nothing to scope out
-        merged = source
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
 
 
 def refresh_gold_incremental(
@@ -125,12 +86,8 @@ def refresh_gold_incremental(
                 # checkpoint once: the write and the row-count metric
                 # share one computation of the delta transformation
                 staged = df.localCheckpoint(eager=True)
-                upsert_parquet_table(
-                    spark,
-                    staged,
-                    f"{gold_root}/{name}",
-                    keys=DIM_KEYS[name],
-                    insert_only=(name == "dim_date"),
+                VersionedParquetTable(spark, f"{gold_root}/{name}").merge(
+                    staged, DIM_KEYS[name], insert_only=name == "dim_date"
                 )
                 written[name] = m.records = staged.count()
 
@@ -138,13 +95,17 @@ def refresh_gold_incremental(
         for name, df in facts.items():
             with pipeline_metrics(f"gold_{name}", table=name) as m:
                 staged = df.localCheckpoint(eager=True)
-                _replace_scope(
-                    spark,
-                    staged,
-                    f"{gold_root}/{name}",
-                    FACT_SCOPE[name],
-                    changed_articles,
-                )
+                table = VersionedParquetTable(spark, f"{gold_root}/{name}")
+                if table.exists():
+                    # every fact is scoped by ArticleKey; the changed
+                    # set is delta-sized, so it broadcasts and the
+                    # table is one anti-join scan, never shuffled
+                    kept = table.read().join(
+                        F.broadcast(changed_articles), "ArticleKey", "left_anti"
+                    )
+                    table.write(kept.unionByName(staged))
+                else:
+                    table.write(staged)
                 written[name] = m.records = staged.count()
         whole.records = sum(written.values())
     return written

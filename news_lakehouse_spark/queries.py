@@ -4612,27 +4612,26 @@ FROM documents WHERE n_chars IS NOT NULL
 
 def x_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction preserves every row bit-for-bit
-    (operators/compact.py — the rewrite_data_files maintenance op every
-    lakehouse deployment runs; reference delegates it to Iceberg).
+    (``VersionedParquetTable.compact`` — the rewrite_data_files
+    maintenance op every lakehouse deployment runs; reference delegates
+    it to Iceberg).
 
-    Fragments a copy of `orders` into many small files, compacts it,
-    asserts the file count actually dropped, and returns a per-status
-    content digest over the COMPACTED copy: row count + a bigint sum of
-    sha2-prefix row hashes. The oracle computes the identical digest
-    from the original table, so any row dropped, duplicated, or mutated
-    by the rewrite flips the value hash.
+    Writes a 48-file copy of `orders` as a versioned table, compacts
+    it, asserts from the two manifests that the file count actually
+    dropped, and returns a per-status content digest over the COMPACTED
+    snapshot: row count + a bigint sum of sha2-prefix row hashes. The
+    oracle computes the identical digest from the original table, so
+    any row dropped, duplicated, or mutated by the rewrite flips the
+    value hash.
     """
-    import hashlib
-    import shutil
-    import tempfile
-
-    from news_lakehouse_spark.operators.compact import compact_parquet_table
+    from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 
     orders = read_table(spark, sf_dir, "orders")
-    base = _tmp_table_path("compact", sf_dir)
-    orders.repartition(48).write.parquet(base)
-    stats = compact_parquet_table(spark, base)
-    assert stats["files_after"] < stats["files_before"], stats
+    t = VersionedParquetTable(spark, _tmp_table_path("compact", sf_dir))
+    t.write(orders.repartition(48))
+    t.compact()
+    files_before, files_after = (h["num_files"] for h in t.history())
+    assert files_after < files_before, (files_before, files_after)
     rowhash = sha2_prefix_long(
         F.concat_ws(
             "|",
@@ -4643,7 +4642,7 @@ def x_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         10,
     )
     return (
-        spark.read.parquet(base)
+        t.read()
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("cnt"),

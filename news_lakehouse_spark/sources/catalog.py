@@ -5,15 +5,16 @@ Reference parity:
   NOT EXISTS ... USING iceberg, b2s:73-158, s2g:150-322) → managed
   parquet table directories under a warehouse root + registered views.
 - S7 existence probe (DESCRIBE + limit(1) in try/except,
-  s2g:100-109) → spark.catalog.tableExists / filesystem probe.
+  s2g:100-109) → committed-manifest probe.
 - S5 FS directory listing for topic autodetect (b2s:216-237, via
   JVM Hadoop FileSystem) → plain listing of child dirs.
 - S12 temp-view staging for MERGE sources (b2s:453-454) →
   create/drop temp views.
 
-The reference's Iceberg catalog is a jar we don't ship offline; a
-warehouse of partitioned parquet directories + the merge layer in
-operators.merge reproduces the same table semantics (SURVEY §7.3).
+The reference's Iceberg catalog is a jar we don't ship offline; every
+table in the warehouse is a manifest-committed ``VersionedParquetTable``
+(sources/transaction.py), which reproduces the same snapshot semantics
+(SURVEY §7.3).
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class ParquetWarehouse:
-    """A namespace of managed parquet tables rooted at a directory."""
+    """A namespace of managed versioned parquet tables rooted at a directory."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -58,30 +59,20 @@ class ParquetWarehouse:
         return with_retry(_list, attempts=3, wait_s=2.0, retry_on=(OSError,))
 
     def table_exists(self, table: str) -> bool:
-        """S7: cheap existence probe without reading data."""
-        p = self.path(table)
-        if not os.path.isdir(p):
-            return False
-        try:
-            self.spark.read.parquet(p).schema
-            return True
-        except Exception:
-            return False
+        """S7: cheap existence probe without reading data — a table
+        exists once its first manifest is committed."""
+        return self.versioned(table).exists()
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        return self.versioned(table).read()
 
     def write(
         self,
         table: str,
         df: DataFrame,
         partition_by: list[str] | None = None,
-        mode: str = "overwrite",
     ) -> None:
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(table))
+        self.versioned(table).write(df, partition_by=partition_by)
 
     def upsert(
         self,
@@ -91,21 +82,14 @@ class ParquetWarehouse:
         partition_by: list[str] | None = None,
         insert_only: bool = False,
     ) -> None:
-        from news_lakehouse_spark.operators.merge import upsert_parquet_table
-
-        upsert_parquet_table(
-            self.spark,
-            source,
-            self.path(table),
-            keys,
-            partition_by=partition_by,
-            insert_only=insert_only,
+        self.versioned(table).merge(
+            source, keys, partition_by=partition_by, insert_only=insert_only
         )
 
     def versioned(self, table: str):
-        """The ACID flavor of a managed table: manifest-committed,
-        time-travelable (sources/transaction.py) — the parquet analog of
-        the reference's Iceberg snapshots."""
+        """A managed table: manifest-committed, time-travelable
+        (sources/transaction.py) — the parquet analog of the
+        reference's Iceberg snapshots."""
         from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 
         return VersionedParquetTable(self.spark, self.path(table))

@@ -3,11 +3,11 @@
 Closes the last non-environment-blocked fidelity gap vs the reference:
 its MERGEs commit Iceberg snapshots (gcs_bronze_to_silver.py:50,457-475
 registers IcebergSparkSessionExtensions and every MERGE INTO commits a
-new table snapshot with read isolation + time travel). The plain-parquet
-emulation in operators/merge.py rewrites partition directories in place,
-so a crash mid-rewrite can leave a partially-updated table and history
-is lost. This module adds the Iceberg/Delta commit protocol on plain
-parquet:
+new table snapshot with read isolation + time travel). operators/merge.py
+states MERGE as DataFrame rewrites; this module materializes them with
+the Iceberg/Delta commit protocol on plain parquet, and it is the one
+write path of every pipeline table (silver stream, gold refreshes,
+``ParquetWarehouse``):
 
   table/
     _manifests/000000000001.json   # one immutable manifest per version
@@ -82,11 +82,10 @@ file list as a single parquet relation (partition values are stored in
 the files as data columns, `__p_<col>=v` dirs exist only for manifest
 pruning), so plan size is independent of history depth and predicate
 pruning applies uniformly. Merges read old files and write ONLY new
-directories — no
-read-rewrite cycle, hence no localCheckpoint barrier (unlike the
-in-place emulation) and old versions stay readable during the write.
-The create-exclusive publish uses os.link, atomic on POSIX/NFS/HDFS-
-mounted paths; on S3-like stores swap `_publish` for a conditional PUT.
+directories — no read-rewrite cycle, hence no localCheckpoint barrier,
+and old versions stay readable during the write. The create-exclusive
+publish uses os.link, atomic on POSIX/NFS/HDFS-mounted paths; on
+S3-like stores swap `_publish` for a conditional PUT.
 """
 
 from __future__ import annotations
@@ -1509,7 +1508,9 @@ class VersionedParquetTable:
         them) publishes with the same atomic link — readers either see
         the complete root+shards or nothing. A losing concurrent
         writer's orphan shards are unlinked immediately; crash orphans
-        are reclaimed by ``vacuum``."""
+        are reclaimed by ``vacuum``. Shards and the root are fsynced
+        before the link and ``_manifests`` after it, so a version that
+        was published survives a power loss."""
         d = self._manifest_dir()
         os.makedirs(d, exist_ok=True)
         manifest = dict(manifest)
@@ -1536,6 +1537,9 @@ class VersionedParquetTable:
                         },
                         f,
                     )
+                    # durable before the root that links it publishes
+                    f.flush()
+                    os.fsync(f.fileno())
                 shards.append(
                     {"fragment": frag, "path": name, "num_files": len(rels)}
                 )
@@ -1562,6 +1566,13 @@ class VersionedParquetTable:
             ) from e
         finally:
             os.unlink(tmp)
+        # make the new directory entry itself durable: without this a
+        # power loss after the link can drop the published version
+        dfd = os.open(d, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
 
     # --- data files ------------------------------------------------------
 
@@ -3883,8 +3894,8 @@ class VersionedParquetTable:
         partitions — untouched partitions' files carry over into the new
         manifest by reference, exactly Iceberg's copy-on-write MERGE. A
         partition emptied by keys moving out simply has no file in the
-        new manifest (no directory deletion needed, unlike the in-place
-        emulation). Returns the committed version.
+        new manifest (no directory deletion needed). Returns the
+        committed version.
 
         ``churn_covers_partitions`` (the apply_changes fast path): a
         frame whose rows are guaranteed to cover every partition value
@@ -4813,8 +4824,7 @@ class VersionedParquetTable:
         """Crash-safe small-file compaction: rewrite the current
         snapshot into a fresh commit sized from the ACTUAL live bytes
         and publish it as a new version — readers never see a partial
-        rewrite (the in-place compact_parquet_table cannot promise
-        that), and the pre-compaction version stays time-travelable
+        rewrite, and the pre-compaction version stays time-travelable
         until vacuumed. Partitioned tables cluster by the partition
         columns AND honor ``target_file_bytes`` inside each partition
         (r5 ask #4): a partition whose live bytes exceed the target

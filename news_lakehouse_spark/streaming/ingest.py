@@ -6,9 +6,11 @@ derivation + keyed upsert per epoch — idempotent because identity is
 content-hashed and the sink MERGEs on those keys
 (gcs_bronze_to_silver.py:392-496,511-573).
 
-At scale: each epoch's work is bounded by the file-trigger cap, and the
-upsert's anti-join shuffles only the delta against the affected
-partitions of the target (see operators.merge).
+Every silver table is a ``VersionedParquetTable``: each epoch commits
+one manifest version per table, so a crash mid-epoch leaves every table
+on a committed snapshot and the checkpoint replays the epoch onto it.
+At scale each epoch's work is bounded by the file-trigger cap, and a
+merge rewrites only the files of the partitions its keys touch.
 """
 
 from __future__ import annotations
@@ -19,10 +21,10 @@ from pyspark.sql import types as T
 
 from news_lakehouse_spark.functions.timestamps import parse_timestamp_any
 from news_lakehouse_spark.metrics import pipeline_metrics
-from news_lakehouse_spark.operators.merge import upsert_parquet_table
 from news_lakehouse_spark.plans.silver import build_silver_tables
 from news_lakehouse_spark.schemas import NEWS_SCHEMA
 from news_lakehouse_spark.sources.readers import read_bronze_stream
+from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 
 # Merge keys per silver table (reference MERGE ONs, b2s:457-490).
 SILVER_KEYS: dict[str, list[str]] = {
@@ -61,12 +63,8 @@ def upsert_silver_batch(
             tables = build_silver_tables(batch_df, require_ts=True)
             for name, df in tables.items():
                 with pipeline_metrics(f"upsert_{name}"):
-                    upsert_parquet_table(
-                        spark,
-                        df,
-                        f"{out_dir}/{name}",
-                        keys=SILVER_KEYS[name],
-                        insert_only=name in INSERT_ONLY,
+                    VersionedParquetTable(spark, f"{out_dir}/{name}").merge(
+                        df, SILVER_KEYS[name], insert_only=name in INSERT_ONLY
                     )
     finally:
         batch_df.unpersist()
@@ -137,8 +135,6 @@ def run_stream_to_versioned_table(
     ``partition_by`` applies to the CREATING commit only; later epochs
     inherit the committed spec (merge() rejects conflicts).
     """
-    from news_lakehouse_spark.sources.transaction import VersionedParquetTable
-
     spark = stream.sparkSession
     table = VersionedParquetTable(spark, table_path)
 
@@ -221,7 +217,6 @@ def run_semantic_index_stream(
     Returns the query handle; tests drive it with processAllAvailable().
     """
     from news_lakehouse_spark.operators.similarity import semantic_index_ingest
-    from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 
     sch = schema or T.StructType(
         [

@@ -7,6 +7,7 @@ from news_lakehouse_spark.plans.incremental import refresh_gold_incremental
 from news_lakehouse_spark.plans.gold import build_gold_dimensions, build_gold_facts
 from news_lakehouse_spark.plans.silver import build_silver_tables
 from news_lakehouse_spark.schemas import NEWS_SCHEMA
+from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 from tests.test_pipeline import make_raw_rows
 
 
@@ -35,14 +36,14 @@ def test_incremental_refresh_matches_full_rebuild(spark, tmp_path):
     expect_dims = build_gold_dimensions(full_silver)
 
     for name, exp in expect_facts.items():
-        got = spark.read.parquet(f"{gold_root}/{name}")
+        got = VersionedParquetTable(spark, f"{gold_root}/{name}").read()
         assert sorted(got.columns) == sorted(exp.columns), name
         assert _df_as_set(got.select(*sorted(got.columns))) == _df_as_set(
             exp.select(*sorted(exp.columns))
         ), name
 
     for name, exp in expect_dims.items():
-        got = spark.read.parquet(f"{gold_root}/{name}")
+        got = VersionedParquetTable(spark, f"{gold_root}/{name}").read()
         assert got.count() == got.select(*[got.columns[0]]).distinct().count(), name
         # every expected member exists (incremental may keep stale
         # members an article no longer references — dims are append-ish)

@@ -174,43 +174,6 @@ def test_simhash_close_for_near_dups(spark):
     assert hamming(sigs[1], sigs[3]) > 10
 
 
-def test_upsert_parquet_partition_move(spark, tmp_path):
-    """An update that moves a key to a new partition must not leave the
-    old row behind (Iceberg MERGE parity for the dynamic-overwrite path),
-    including when the old partition is emptied entirely."""
-    from news_lakehouse_spark.operators.merge import upsert_parquet_table
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, "2024-01-01", "a"), (2, "2024-01-02", "b"), (3, "2024-01-03", "c")],
-        ["k", "dt", "v"],
-    )
-    upsert_parquet_table(spark, base, path, ["k"], partition_by=["dt"])
-
-    # key 1 moves 01-01 -> 01-05 (01-01 empties); key 2 updates in place
-    delta = spark.createDataFrame(
-        [(1, "2024-01-05", "A"), (2, "2024-01-02", "B")], ["k", "dt", "v"]
-    )
-    upsert_parquet_table(spark, delta, path, ["k"], partition_by=["dt"])
-
-    # partition-column inference reads dt back as a date → normalize
-    got = {
-        (r["k"], r["dt"], r["v"])
-        for r in spark.read.parquet(path)
-        .withColumn("dt", F.col("dt").cast("string"))
-        .collect()
-    }
-    assert got == {
-        (1, "2024-01-05", "A"),
-        (2, "2024-01-02", "B"),
-        (3, "2024-01-03", "c"),
-    }
-    # conf restored
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
-    )
-
-
 def test_ngram_jaccard_max_df_noop_when_under_cap(spark):
     """With a cap no shingle exceeds, output is identical to uncapped."""
     rows = [(i, f"shared prefix words here document {i} body {'token %d ' % i * 10}")
@@ -555,33 +518,6 @@ def test_quantile_bucket_thresholds(spark):
     assert max(by_bucket[3]) == 75.0 and min(by_bucket[4]) == 76.0
 
 
-def test_upsert_parquet_null_partition_move_cleans_hive_default_dir(spark, tmp_path):
-    """A key moving OUT of a NULL partition must clean the
-    __HIVE_DEFAULT_PARTITION__ directory (str(None) names no real dir)."""
-    from news_lakehouse_spark.operators.merge import upsert_parquet_table
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, None, "a"), (2, "2024-01-02", "b")], ["k", "dt", "v"]
-    )
-    upsert_parquet_table(spark, base, path, ["k"], partition_by=["dt"])
-
-    delta = spark.createDataFrame([(1, "2024-01-05", "A")], ["k", "dt", "v"])
-    upsert_parquet_table(spark, delta, path, ["k"], partition_by=["dt"])
-
-    got = {
-        (r["k"], r["dt"], r["v"])
-        for r in spark.read.parquet(path)
-        .withColumn("dt", F.col("dt").cast("string"))
-        .collect()
-    }
-    # key 1 exists exactly once, in its new partition
-    assert got == {(1, "2024-01-05", "A"), (2, "2024-01-02", "b")}
-    import os
-
-    assert not os.path.exists(os.path.join(path, "dt=__HIVE_DEFAULT_PARTITION__"))
-
-
 def test_stratified_sample_requires_row_keys(spark):
     import pytest
 
@@ -703,64 +639,26 @@ def test_upsert_schema_evolution_adds_columns(spark, tmp_path):
     """evolve_schema=True widens the table with source-only columns
     (Iceberg add-column evolution); old rows read back null. Off by
     default, a new column is dropped, not silently added."""
-    from news_lakehouse_spark.operators.merge import upsert_parquet_table
+    from news_lakehouse_spark.sources.transaction import VersionedParquetTable
 
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    upsert_parquet_table(spark, base, path, ["k"])
+    t = VersionedParquetTable(spark, str(tmp_path / "t"))
+    t.merge(spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), ["k"])
 
     delta = spark.createDataFrame([(2, "B", "en"), (3, "c", "de")], ["k", "v", "lang"])
-    upsert_parquet_table(spark, delta, path, ["k"], evolve_schema=True)
+    t.merge(delta, ["k"], evolve_schema=True)
 
-    got = {
-        (r["k"], r["v"], r["lang"])
-        for r in spark.read.option("mergeSchema", "true").parquet(path).collect()
-    }
+    got = {(r["k"], r["v"], r["lang"]) for r in t.read().collect()}
     assert got == {(1, "a", None), (2, "B", "en"), (3, "c", "de")}
 
-    # default path: a further upsert WITHOUT the flag keeps the (now
+    # default path: a further merge WITHOUT the flag keeps the (now
     # evolved) schema and projects the source onto it
     delta2 = spark.createDataFrame([(4, "d", "fr", 9)], ["k", "v", "lang", "extra"])
-    upsert_parquet_table(spark, delta2, path, ["k"])
-    cols = set(spark.read.option("mergeSchema", "true").parquet(path).columns)
-    assert cols == {"k", "v", "lang"}
-
-
-def test_delete_rows_partition_pruned_and_idempotent(spark, tmp_path):
-    """Keyed delete rewrites only partitions containing matches, cleans
-    emptied dirs, reports removed counts, and replays as a no-op."""
-    import os
-
-    from news_lakehouse_spark.operators.merge import delete_rows, upsert_parquet_table
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, "2024-01-01", "a"), (2, "2024-01-01", "b"),
-         (3, "2024-01-02", "c"), (4, "2024-01-03", "d")],
-        ["k", "dt", "v"],
-    )
-    upsert_parquet_table(spark, base, path, ["k"], partition_by=["dt"])
-
-    dk = spark.createDataFrame([(3,), (4,), (99,)], ["k"])
-    assert delete_rows(spark, path, ["k"], dk, partition_by=["dt"]) == 2
-    got = {
-        (r["k"], r["v"]) for r in spark.read.parquet(path).collect()
+    t.merge(delta2, ["k"])
+    back = t.read()
+    assert set(back.columns) == {"k", "v", "lang"}
+    assert {(r["k"], r["v"], r["lang"]) for r in back.collect()} == got | {
+        (4, "d", "fr")
     }
-    assert got == {(1, "a"), (2, "b")}
-    # both single-row partitions were emptied and their dirs removed
-    assert not os.path.exists(os.path.join(path, "dt=2024-01-02"))
-    assert not os.path.exists(os.path.join(path, "dt=2024-01-03"))
-    # idempotent replay
-    assert delete_rows(spark, path, ["k"], dk, partition_by=["dt"]) == 0
-    # unpartitioned flavor
-    path2 = str(tmp_path / "t2")
-    upsert_parquet_table(spark, base, path2, ["k"])
-    assert delete_rows(spark, path2, ["k"], dk) == 2
-    assert spark.read.parquet(path2).count() == 2
-    # a no-op unpartitioned delete must NOT rewrite the table files
-    before = sorted(os.listdir(path2))
-    assert delete_rows(spark, path2, ["k"], dk) == 0
-    assert sorted(os.listdir(path2)) == before
 
 
 def test_evolve_schema_rejects_source_missing_target_columns(spark):

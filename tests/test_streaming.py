@@ -4,12 +4,18 @@ upsert with checkpoint recovery, and watermarked windowed aggregation."""
 from __future__ import annotations
 
 import json
+import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from news_lakehouse_spark.streaming.ingest import run_bronze_to_silver_stream
+from news_lakehouse_spark.sources.transaction import VersionedParquetTable
+from news_lakehouse_spark.streaming.ingest import (
+    SILVER_KEYS,
+    run_bronze_to_silver_stream,
+    upsert_silver_batch,
+)
 from news_lakehouse_spark.streaming.windows import windowed_event_counts
 
 
@@ -61,7 +67,7 @@ def test_stream_upsert_and_recovery(spark, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    arts = spark.read.parquet(str(out / "articles"))
+    arts = VersionedParquetTable(spark, str(out / "articles")).read()
     assert arts.count() == 5
 
     # second drop: 2 updated urls (new title), 3 new → upsert
@@ -71,10 +77,86 @@ def test_stream_upsert_and_recovery(spark, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    arts = spark.read.parquet(str(out / "articles"))
+    arts = VersionedParquetTable(spark, str(out / "articles")).read()
     assert arts.count() == 8  # 5 ∪ {3..7}
     t3 = arts.filter(F.col("URL") == "https://news.example/3").first()["Title"]
     assert t3 == "t3v2"  # update branch won
+
+
+def _silver_state(spark, out):
+    """(committed version, row set) of every silver table under ``out``."""
+    state = {}
+    for name in SILVER_KEYS:
+        t = VersionedParquetTable(spark, str(out / name))
+        state[name] = (t.latest_version(), {tuple(r) for r in t.read().collect()})
+    return state
+
+
+def _drain_silver_stream(spark, bronze_root, out, ckpt):
+    q = run_bronze_to_silver_stream(spark, str(bronze_root), str(out), str(ckpt))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+@pytest.mark.slow
+def test_silver_stream_crash_mid_epoch_recovers(spark, tmp_path, monkeypatch):
+    """A driver dying inside the k-th silver table's commit of an epoch
+    fails the query and tears no table: the tables committed earlier in
+    the epoch read their new snapshot, the rest read the previous one,
+    and a restart on the same checkpoint replays the epoch to the state
+    of a run that never crashed."""
+    from news_lakehouse_spark.sources.readers import read_bronze_batch
+
+    bronze = tmp_path / "bronze"
+    out = tmp_path / "silver"
+    ckpt = tmp_path / "ckpt"
+    _write_batch(bronze / "t1", [_article(i) for i in range(3)])
+    _drain_silver_stream(spark, bronze, out, ckpt)
+    before = _silver_state(spark, out)
+
+    # reference: the same second epoch applied to a copy, with no crash
+    _write_batch(
+        bronze / "t2", [_article(i, comments=4, price_bump="v2") for i in range(1, 5)]
+    )
+    clean_out = tmp_path / "clean_silver"
+    shutil.copytree(out, clean_out)
+    upsert_silver_batch(
+        spark, read_bronze_batch(spark, str(bronze / "t2")), str(clean_out)
+    )
+    clean = {n: rows for n, (_v, rows) in _silver_state(spark, clean_out).items()}
+
+    k = 4
+    published: list[str] = []
+    real_publish = VersionedParquetTable._publish
+
+    def crash_on_kth(self, manifest):
+        published.append(os.path.basename(self.path))
+        if len(published) == k:
+            raise RuntimeError("driver died mid-commit")
+        return real_publish(self, manifest)
+
+    monkeypatch.setattr(VersionedParquetTable, "_publish", crash_on_kth)
+    q = run_bronze_to_silver_stream(spark, str(bronze), str(out), str(ckpt))
+    with pytest.raises(Exception, match="driver died mid-commit"):
+        q.processAllAvailable()
+    assert q.exception() is not None
+    q.stop()
+    monkeypatch.undo()
+
+    committed = set(published[: k - 1])
+    after = _silver_state(spark, out)
+    for name, (version, rows) in after.items():
+        if name in committed:
+            assert version == before[name][0] + 1, name
+            assert rows == clean[name], name
+        else:  # the crashed commit and the tables it never reached
+            assert (version, rows) == before[name], name
+
+    _drain_silver_stream(spark, bronze, out, ckpt)
+    recovered = {n: rows for n, (_v, rows) in _silver_state(spark, out).items()}
+    assert recovered == clean
 
 
 def test_stream_dedupe_within_watermark_collapses_cross_batch(spark, tmp_path):
@@ -127,7 +209,7 @@ def test_stream_dedupe_integrated_yields_one_silver_row(spark, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    arts = spark.read.parquet(str(out / "articles"))
+    arts = VersionedParquetTable(spark, str(out / "articles")).read()
     assert arts.count() == 1
 
 
@@ -224,29 +306,6 @@ def test_dedupe_stream_within_watermark(spark, tmp_path):
     assert {r["event_id"]: r["v"] for r in got} == {1: "a", 2: "b", 3: "c"}
 
 
-def test_compact_parquet_table(spark, tmp_path):
-    from news_lakehouse_spark.operators.compact import compact_parquet_table
-
-    path = str(tmp_path / "frag")
-    df = spark.range(0, 10000).withColumn("g", F.col("id") % 3)
-    df.repartition(40).write.parquet(path)
-    want = {tuple(r) for r in spark.read.parquet(path).collect()}
-    stats = compact_parquet_table(spark, path, target_file_bytes=1 << 30)
-    assert stats["files_before"] >= 40
-    assert stats["files_after"] == 1
-    back = spark.read.parquet(path)
-    # full value preservation, not just count/sum invariants
-    assert {tuple(r) for r in back.collect()} == want
-
-    # partitioned: one file per partition value afterwards
-    p2 = str(tmp_path / "frag_part")
-    df.repartition(30).write.partitionBy("g").parquet(p2)
-    stats2 = compact_parquet_table(spark, p2, partition_by=["g"])
-    assert stats2["files_after"] == 3 < stats2["files_before"]
-    back2 = spark.read.parquet(p2)
-    assert back2.count() == 10000
-
-
 def test_stream_stream_interval_join(spark, tmp_path):
     from news_lakehouse_spark.streaming.windows import stream_stream_interval_join
 
@@ -324,7 +383,7 @@ def test_streaming_bronze_to_gold_end_to_end(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
-    fap = spark.read.parquet(f"{gold}/fact_article_publication")
+    fap = VersionedParquetTable(spark, f"{gold}/fact_article_publication").read()
     assert fap.count() == 4
     # second batch updates one article and adds one
     _write_batch(bronze, [_article(0, comments=5, price_bump="!"), _article(9)])
@@ -335,7 +394,7 @@ def test_streaming_bronze_to_gold_end_to_end(spark, tmp_path):
         .start()
     )
     q2.awaitTermination(180)
-    fap2 = spark.read.parquet(f"{gold}/fact_article_publication")
+    fap2 = VersionedParquetTable(spark, f"{gold}/fact_article_publication").read()
     assert fap2.count() == 5
     assert fap2.select("ArticleKey").distinct().count() == 5
 
@@ -378,8 +437,6 @@ def test_semantic_index_stream_two_drops(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    from news_lakehouse_spark.sources.transaction import VersionedParquetTable
-
     idx = VersionedParquetTable(spark, str(tmp_path / "idx"))
     assert sorted(r["vec_id"] for r in idx.read().collect()) == [0, 1, 2, 11]
 
@@ -389,7 +446,6 @@ def test_stream_to_versioned_table_epochs_commit_atomically(spark, tmp_path):
     stream's commit log, time travel reproduces per-epoch states, the
     keyed merge upserts across epochs, and a restart from checkpoint
     neither duplicates nor loses rows."""
-    from news_lakehouse_spark.sources.transaction import VersionedParquetTable
     from news_lakehouse_spark.streaming.ingest import (
         run_stream_to_versioned_table,
     )

@@ -89,6 +89,23 @@ def test_partition_move_leaves_no_ghost(spark, table):
     assert all("/__p_d=a/" not in f for f in m2["files"])
 
 
+def test_versioned_merge_null_partition_move(spark, table):
+    """A key moving OUT of the NULL partition leaves no row behind: once
+    that partition empties, the new manifest lists no file of it."""
+    schema = "k long, d string, v long"
+    table.merge(
+        spark.createDataFrame([(1, None, 10), (2, "b", 20)], schema),
+        ["k"],
+        partition_by=["d"],
+    )
+    null_frag = "/__p_d=__HIVE_DEFAULT_PARTITION__/"
+    assert any(null_frag in f for f in table._load_manifest(1)["files"])
+    table.merge(spark.createDataFrame([(1, "c", 11)], schema), ["k"])
+    # key 1 exists exactly once, in its new partition
+    assert _rows(table.read()) == {(1, "c", 11), (2, "b", 20)}
+    assert all(null_frag not in f for f in table._load_manifest(2)["files"])
+
+
 def test_crash_between_data_write_and_publish(spark, table, monkeypatch):
     """Writer dies after step 1 (data files) but before step 3 (manifest
     link): readers stay on the old version; a later merge succeeds and
@@ -380,36 +397,8 @@ def test_all_null_stat_column_prunes(spark, table):
     assert len(pruned) == 1
 
 
-# --- join-based partition restriction past the OR-chain threshold --------
-
-
-def test_filter_to_partitions_join_path_matches_or_chain(spark):
-    from news_lakehouse_spark.operators.merge import filter_to_partitions
-
-    df = spark.createDataFrame(
-        [(i, f"p{i % 7}", None if i % 5 == 0 else f"s{i % 3}")
-         for i in range(100)],
-        "k int, d string, s string",
-    )
-    parts = [
-        {"d": f"p{i}", "s": None if i == 0 else f"s{i % 3}"} for i in range(5)
-    ]
-    or_chain = filter_to_partitions(df, parts, ["d", "s"], max_or_chain=1000)
-    joined = filter_to_partitions(df, parts, ["d", "s"], max_or_chain=2)
-    assert {tuple(r) for r in or_chain.collect()} == {
-        tuple(r) for r in joined.collect()
-    }
-    # the join path really is a join, not a literal predicate
-    plan = joined._jdf.queryExecution().toString()
-    assert "LeftSemi" in plan
-
-
-def test_versioned_merge_join_partition_path(spark, table, monkeypatch):
-    """merge() over a high-cardinality partition scheme takes the
-    semi-join partition restriction and stays correct."""
-    import news_lakehouse_spark.operators.merge as m
-
-    monkeypatch.setattr(m, "MAX_PARTITION_OR_CHAIN", 2)
+def test_versioned_merge_join_partition_path(spark, table):
+    """merge() updating many one-key partitions at once stays correct."""
     rows = [(i, f"p{i}", i * 10) for i in range(8)]
     table.merge(_df(spark, rows), ["k"], partition_by=["d"])
     table.merge(_df(spark, [(i, f"p{i}", i * 10 + 1) for i in range(5)]), ["k"])
@@ -574,6 +563,32 @@ def test_sharded_manifest_roundtrip_and_partition_read(spark, table):
     }
 
 
+def test_publish_fsyncs_shards_root_and_directory(spark, table, monkeypatch):
+    """A published version survives power loss: every shard file and the
+    root manifest are fsynced before the link publishes them, and the
+    _manifests directory is fsynced after it."""
+    synced: list[int] = []
+    real_fsync = os.fsync
+
+    def record(fd):
+        synced.append(os.fstat(fd).st_ino)
+        real_fsync(fd)
+
+    table.shard_threshold = 0
+    monkeypatch.setattr(os, "fsync", record)
+    table.merge(_df(spark, [(1, "a", 10), (2, "b", 20)]), ["k"], partition_by=["d"])
+    monkeypatch.undo()
+    mdir = table._manifest_dir()
+    shards = [
+        os.stat(os.path.join(mdir, s["path"])).st_ino
+        for s in table._load_root(1)["shards"]
+    ]
+    root = os.stat(table._manifest_path(1)).st_ino
+    assert len(shards) == 2
+    assert synced.index(root) > max(synced.index(s) for s in shards)
+    assert synced[-1] == os.stat(mdir).st_ino
+
+
 def test_sharded_manifest_merge_and_stats_carry(spark, table):
     """Merges against a sharded parent carry untouched partitions by
     reference and keep column stats usable for pruning."""
@@ -721,6 +736,9 @@ def test_delete_keys_merge_on_read(spark, table):
     # time travel: pre-delete snapshot intact
     assert table.read(version=1).count() == 8
     assert table.history()[-1]["operation"] == "delete"
+    # replaying the same delete (e.g. a retried job) changes no row
+    table.delete_keys(spark.createDataFrame([Row(k=2), Row(k=5)]))
+    assert _rows(table.read().select("k")) == {(k,) for k in (1, 3, 4, 6, 7, 8)}
 
 
 def test_delete_then_reinsert_wins(spark, table):
