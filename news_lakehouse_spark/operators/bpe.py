@@ -31,7 +31,7 @@ algorithm.
 Scale: each round is one shuffle over distinct-pair cardinality
 (bounded by |alphabet+merges|^2, tiny) with map-side combine; corpus
 rewrites chain as narrow transformations and are checkpointed every
-``checkpoint_every`` rounds so the plan never grows unbounded.  On a
+``_CHECKPOINT_EVERY`` rounds so the plan never grows unbounded.  On a
 real 100 TB corpus you train on a sample — pass ``sample_fraction``.
 
 The private-use markers (U+E000..) must be absent from the corpus;
@@ -48,6 +48,7 @@ from news_lakehouse_spark.operators.iterstate import LineageTruncator
 __all__ = ["train_bpe_merges", "apply_bpe"]
 
 _PUA_START = 0xE000
+_CHECKPOINT_EVERY = 4
 
 
 def _reject_markers(
@@ -58,8 +59,7 @@ def _reject_markers(
     if df.filter(F.col(col).rlike(f"[{lo}-{hi}]")).limit(1).count():
         raise ValueError(
             f"corpus already contains marker codepoints "
-            f"U+{marker_start:04X}..U+{marker_start + num_merges - 1:04X}; "
-            f"pass a different marker_start"
+            f"U+{marker_start:04X}..U+{marker_start + num_merges - 1:04X}"
         )
 
 
@@ -164,8 +164,6 @@ def train_bpe_merges(
     num_merges: int,
     *,
     min_freq: int = 2,
-    marker_start: int = _PUA_START,
-    checkpoint_every: int = 4,
     sample_fraction: float | None = None,
     recount_every: int = 1,
     stats: dict | None = None,
@@ -197,7 +195,7 @@ def train_bpe_merges(
     work = df.select(F.col(text_col).alias("t")).filter(F.col("t").isNotNull())
     # guard the FULL corpus, not the sample: an unsampled row holding
     # a marker char would still corrupt apply_bpe downstream
-    _reject_markers(work, "t", num_merges, marker_start)
+    _reject_markers(work, "t", num_merges, _PUA_START)
     if sample_fraction is not None:
         work = work.sample(fraction=sample_fraction, seed=7)
 
@@ -225,7 +223,7 @@ def train_bpe_merges(
             k = len(merges)
             pair, freq = r["pair"], int(r["freq"])
             left, right = pair[0], pair[1]
-            marker = chr(marker_start + k)
+            marker = chr(_PUA_START + k)
             token = expand.get(left, left) + expand.get(right, right)
             expand[marker] = token
             merges.append(
@@ -242,7 +240,7 @@ def train_bpe_merges(
             # equals applying them sequentially — one scan for the batch
             rewrite = F.replace(rewrite, F.lit(pair), F.lit(marker))
         work = work.withColumn("t", rewrite)
-        if count_rounds % checkpoint_every == 0:
+        if count_rounds % _CHECKPOINT_EVERY == 0:
             # lazy: the next loop's pair-count collect scans every
             # partition and materializes this checkpoint in its own
             # job (reliable mode stays eager inside the truncator)

@@ -162,14 +162,11 @@ def _spj_plan(
         return root, files, schema, None, "no bucket(n, join_key) in spec"
     if root.get("delete_files"):
         return root, files, schema, bf, "pending merge-on-read deletes"
-    if "schemas" in root:
-        cur = root["schema_id"]
-        sids = root.get("file_sids") or {}
-        if any(sids.get(rel, cur) != cur for rel in files):
-            return (
-                root, files, schema, bf,
-                "live files span schema epochs (needs field-id read)",
-            )
+    if any(rel in root["file_sids"] for rel in files):
+        return (
+            root, files, schema, bf,
+            "live files span schema epochs (needs field-id read)",
+        )
     seg = f"__p_{bf.name}"
     for rel in files:
         if seg not in _frag_columns(_file_partition_fragment(rel)):

@@ -15,8 +15,8 @@ Surrogate keys are xxhash64 of the natural key (s2g:400,422,...); the
 Scale notes: dims are tiny relative to facts — every dim enrichment
 join is broadcast; fact assembly joins shuffle on ArticleID only where
 pre-aggregated counts require it (J2), and those aggregates are
-map-side-combined groupBy counts. Facts partition by their date key on
-write so date predicates prune.
+map-side-combined groupBy counts. Every gold table, facts included, is
+written unpartitioned: its manifest carries ``partition_by: []``.
 """
 
 from __future__ import annotations

@@ -3158,8 +3158,7 @@ def x_rollback_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     column names — silent NULLs in the feed. Epoch ids are now
     globally unique (transaction.py rollback carries post-target
     epochs; _evolve_commit_once/_epoch_state allocate past every known
-    id) and the endpoint-copy substitution verifies same-epoch
-    identity. v1 = %3 keys (val = exact cents); v2 rename val→y;
+    id). v1 = %3 keys (val = exact cents); v2 rename val→y;
     v3 = %5 merge (2×); v4 rename y→z; v5 = %7 merge (3×);
     v6 = rollback(3); v7 rename y→w; v8 = %11 merge (5×).
     changes(5, 8) is the per-key state5→state8 delta — every value

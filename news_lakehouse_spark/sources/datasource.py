@@ -119,22 +119,19 @@ def _file_plan(
     phys_fields: list[dict], pinned_fields: list[dict], rel: str
 ) -> list[tuple[str, str | None]]:
     """Per-file projection plan: [(pinned_name, physical_name|None)]
-    in pinned-schema order (None = null-fill). Matching is BY FIELD ID
-    when both sides carry fids, by name otherwise (legacy epochs).
+    in pinned-schema order (None = null-fill). Matching is BY FIELD ID;
+    a pinned field without one (a user-supplied batch schema) matches
+    by name.
     Raises on anything a file-level Arrow projection cannot do
     faithfully: a nested type that diverges beyond fid metadata, or a
     physical type the pinned type cannot represent (schema drift past
     the stream's pinned schema)."""
-    by_fid = {
-        _field_fid(f): f for f in phys_fields if _field_fid(f) is not None
-    }
+    by_fid = {_field_fid(f): f for f in phys_fields}
     by_name = {f["name"]: f for f in phys_fields}
     plan: list[tuple[str, str | None]] = []
     for f in pinned_fields:
         fid = _field_fid(f)
-        src = by_fid.get(fid) if fid is not None else None
-        if src is None and (fid is None or not by_fid):
-            src = by_name.get(f["name"])
+        src = by_name.get(f["name"]) if fid is None else by_fid.get(fid)
         if src is None:
             plan.append((f["name"], None))  # added after this file
             continue
@@ -178,17 +175,10 @@ def _plans_for(
     """One picklable partition per data file, each carrying its own
     projection plan (files pin to the schema epoch they were written
     under — manifest `file_sids`)."""
-    schemas = root.get("schemas") or {}
-    cur_sid = root.get("schema_id", 0)
-    fsids = root.get("file_sids") or {}
     out = []
     for rel in rels:
-        sid = fsids.get(rel, cur_sid)
-        phys = (
-            schemas[str(sid)]["fields"]
-            if schemas
-            else root["schema"]["fields"]
-        )
+        sid = root["file_sids"].get(rel, root["schema_id"])
+        phys = root["schemas"][str(sid)]["fields"]
         out.append(
             _FilePartition(
                 path=os.path.join(table.path, rel),

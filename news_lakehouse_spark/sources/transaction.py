@@ -59,15 +59,16 @@ finds small-file buildup from the manifest alone and
 DataFrames (the Iceberg metadata-table analog).
 
 Field-id schema evolution: ``rename_column`` / ``drop_column`` /
-``widen_column`` / ``add_column`` are metadata-only commits. Columns
-carry stable field ids in the manifest schema's field metadata, files
-pin to the schema EPOCH they were written under (``schemas`` +
-``file_sids`` manifest keys), and reads map physical columns to the
-current logical schema by id — one scan group per live epoch, so
-renames re-alias, widened types cast, dropped-then-re-added names
-never resurrect old bytes, and time travel / change feeds across an
-evolution stay correct. Tables that never evolve stay in the legacy
-name-mapped format with zero overhead.
+``widen_column`` / ``add_column`` are metadata-only commits. Every
+column, nested struct fields included, gets a stable field id in the
+manifest schema's field metadata at the table's first commit (epoch
+0); files pin to the schema EPOCH they were written under
+(``schemas`` + ``file_sids`` manifest keys), and reads map physical
+columns to the current logical schema by id — one scan group per live
+epoch, so renames re-alias, widened types cast, dropped-then-re-added
+names never resurrect old bytes, and time travel / change feeds across
+an evolution stay correct. A table that never evolves has one epoch
+and reads as a single scan with no projection.
 
 Scale notes (100 TB): manifests are driver-side JSON listing file paths
 — at 128 MB/file a 100 TB table is ~800k entries. Past
@@ -108,12 +109,15 @@ from news_lakehouse_spark.sources.partition_spec import (
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 
-# Manifest layout version. 2 = partition values stored in-file with
-# __p_ directory fragments (round 5). Layout 1 tables (d=... dirs,
-# basePath-grouped reads) would be silently mis-read by this code —
-# partition columns null-fill and partition filters match nothing — so
-# _load_root refuses manifests without the marker instead of guessing.
-_LAYOUT = 2
+# Manifest layout version. 3 = partition values stored in-file with
+# __p_ directory fragments, and every manifest carries the schema-epoch
+# keys (``_EPOCH_KEYS``) from the table's first commit. Older layouts
+# would be silently mis-read by this code — layout 1 (d=... dirs) null-
+# fills partition columns, layout 2 has no field ids on tables that
+# never evolved — so _load_root refuses any other marker instead of
+# guessing.
+_LAYOUT = 3
+_EPOCH_KEYS = ("schema_id", "schemas", "file_sids", "next_fid")
 
 # Shard the manifest's file list per partition fragment once it grows
 # past this many files: an 800k-file table stays readable without one
@@ -494,9 +498,8 @@ def _overlap_selector(spark: SparkSession, parts: list[dict]):
 # each file's physical columns to the current logical schema BY ID, so
 # rename/drop/type-widen are metadata-only commits, time travel across
 # a rename reads old snapshots correctly, and a re-added column name
-# never resurrects dropped data (new name, new id). Tables never
-# touched by rename/drop/widen/add_column stay in the legacy name-
-# mapped format with zero overhead.
+# never resurrects dropped data (new name, new id). The first commit
+# mints epoch 0, so every table has these keys.
 
 _WIDENINGS = {
     "byte": ("short", "integer", "long"),
@@ -549,22 +552,21 @@ def _is_map(t) -> bool:
 
 
 def _walk_assign_fids(t, alloc):
-    """Assign a fresh fid to every nested struct field missing one,
-    depth-first — the id authority for newly-added nested subtrees."""
+    """Assign a fresh fid to every nested struct field, depth-first —
+    the id authority for newly-added nested subtrees. Ids a DataFrame
+    read from another table carries are replaced, never reused."""
     if _is_struct(t):
-        fields = []
-        for f in t["fields"]:
-            meta = dict(f.get("metadata") or {})
-            if "fid" not in meta:
-                meta["fid"] = alloc()
-            fields.append(
+        return {
+            **t,
+            "fields": [
                 {
                     **f,
-                    "metadata": meta,
+                    "metadata": {**(f.get("metadata") or {}), "fid": alloc()},
                     "type": _walk_assign_fids(f["type"], alloc),
                 }
-            )
-        return {**t, "fields": fields}
+                for f in t["fields"]
+            ],
+        }
     if _is_array(t):
         return {**t, "elementType": _walk_assign_fids(t["elementType"], alloc)}
     if _is_map(t):
@@ -619,63 +621,6 @@ def _graft_nested_fids(new_t, parent_t, alloc):
             ),
         }
     return new_t
-
-
-def _needs_nested_fids(t) -> bool:
-    """True when any struct field nested INSIDE ``t`` lacks a fid —
-    the shape of epoch schemas persisted before nested-fid support."""
-    if _is_struct(t):
-        return any(
-            _field_fid(f) is None or _needs_nested_fids(f["type"])
-            for f in t["fields"]
-        )
-    if _is_array(t):
-        return _needs_nested_fids(t["elementType"])
-    if _is_map(t):
-        return _needs_nested_fids(t["valueType"])
-    return False
-
-
-def _amend_nested_fids(schemas: dict[str, dict], alloc) -> dict[str, dict]:
-    """Retrofit nested fids onto epoch schemas persisted BEFORE nested
-    evolution existed. Before this feature no operation could rename or
-    drop a nested field, so same-named nested fields across epochs are
-    the same field — epoch 0 gets fresh ids depth-first and every later
-    epoch grafts them by name from its amended predecessor (top-level
-    fields align by their existing top-level fid). Older manifests keep
-    their unamended schemas; their reads fall back to name matching at
-    fid-less nested levels, which is exactly the pre-amendment
-    semantics."""
-    out: dict[str, dict] = {}
-    prev: dict | None = None
-    for sid in sorted(schemas, key=int):
-        s = schemas[sid]
-        if prev is None:
-            fields = [
-                {**f, "type": _walk_assign_fids(f["type"], alloc)}
-                for f in s["fields"]
-            ]
-        else:
-            prev_by_fid = {_field_fid(f): f for f in prev["fields"]}
-            fields = []
-            for f in s["fields"]:
-                pf = prev_by_fid.get(_field_fid(f))
-                if pf is None:
-                    fields.append(
-                        {**f, "type": _walk_assign_fids(f["type"], alloc)}
-                    )
-                else:
-                    fields.append(
-                        {
-                            **f,
-                            "type": _graft_nested_fids(
-                                f["type"], pf["type"], alloc
-                            ),
-                        }
-                    )
-        out[sid] = {**s, "fields": fields}
-        prev = out[sid]
-    return out
 
 
 def _type_at_path(t, segs: list[str]):
@@ -781,22 +726,6 @@ def _edit_type_path(t, segs: list[str], on_fields, on_type):
     )
 
 
-def _type_max_fid(t) -> int:
-    if _is_struct(t):
-        return max(
-            (
-                max(_field_fid(f) or 0, _type_max_fid(f["type"]))
-                for f in t["fields"]
-            ),
-            default=0,
-        )
-    if _is_array(t):
-        return _type_max_fid(t["elementType"])
-    if _is_map(t):
-        return _type_max_fid(t["valueType"])
-    return 0
-
-
 def _validated_widen_type(name: str, cur_t, tgt: str):
     """The Iceberg-safe promotion check, shared by top-level and nested
     widen (including array-element / map-value targets)."""
@@ -823,8 +752,8 @@ def _schema_signature(schema_json: dict) -> list[tuple]:
 
 
 def _strip_nested_fids(t):
-    """Type JSON with nested-field ``fid`` metadata removed — the parts
-    ``_amend_nested_fids`` adds and nothing else touches."""
+    """Type JSON with nested-field ``fid`` metadata removed, for
+    comparing a type against one that carries no field ids."""
     if _is_struct(t):
         return {
             **t,
@@ -852,93 +781,10 @@ def _strip_nested_fids(t):
     return t
 
 
-def _same_epoch(a_json: dict, b_json: dict) -> bool:
-    """True when two copies of an epoch schema denote the SAME epoch:
-    identical up to the nested-fid retrofit (``_amend_nested_fids``
-    only ADDS nested fids). Distinguishes a retrofitted copy (safe to
-    substitute for the original) from a REUSED schema id — possible on
-    tables that rolled back before epoch ids became globally unique:
-    the restored manifest forgot post-target epochs and the next
-    evolution re-issued the same ordinal for a different schema
-    (advice r8). Substituting across that reuse would read old files
-    under wrong physical column names."""
-
-    def key(s: dict) -> list[tuple]:
-        return [
-            (
-                f["name"],
-                _field_fid(f),
-                json.dumps(_strip_nested_fids(f["type"]), sort_keys=True),
-            )
-            for f in s["fields"]
-        ]
-
-    return key(a_json) == key(b_json)
-
-
-def _prefer_endpoint_schemas(
-    own_schemas: dict[str, dict], endpoint_schemas: dict[str, dict]
-) -> dict[str, dict]:
-    """A manifest's epoch table with the ENDPOINT's copy substituted
-    per epoch — but only when both copies denote the same epoch
-    (``_same_epoch``): the endpoint's copy carries retrofitted nested
-    fids an older manifest lacks, which is the whole point of the
-    substitution; a post-rollback sid reuse keeps the manifest's own
-    (correct) copy instead."""
-    return {
-        s: (
-            endpoint_schemas[s]
-            if s in endpoint_schemas
-            and _same_epoch(endpoint_schemas[s], sj)
-            else sj
-        )
-        for s, sj in own_schemas.items()
-    }
-
-
-def _with_positional_fids(schema_json: dict) -> dict:
-    """Upgrade a legacy schema: field i gets fid i+1 (unchanged from
-    the flat-table format, so previously-persisted epoch-0 schemas
-    stay identical), then NESTED struct fields get sequential ids
-    after the top-level block, depth-first — deterministic, so a
-    legacy snapshot's columns map into epoch 0 consistently. Legacy
-    data files are all name-compatible with this epoch (pre-upgrade
-    evolution was add-column only), so epoch 0 reads them by name."""
-    n = len(schema_json["fields"])
-    counter = {"next": n + 1}
-
-    def alloc() -> int:
-        v = counter["next"]
-        counter["next"] += 1
-        return v
-
-    fields = [
-        {
-            **f,
-            "metadata": {**(f.get("metadata") or {}), "fid": i + 1},
-            "type": _walk_assign_fids(f["type"], alloc),
-        }
-        for i, f in enumerate(schema_json["fields"])
-    ]
-    return {**schema_json, "fields": fields}
-
-
-def _max_fid(schemas: dict[str, dict]) -> int:
-    return max(
-        (
-            max(_field_fid(f) or 0, _type_max_fid(f["type"]))
-            for s in schemas.values()
-            for f in s["fields"]
-        ),
-        default=0,
-    )
-
-
 def _fid_map_expr(expr, src_t, tgt_t, tgt_dtype):
     """Column expression projecting a physical value of type JSON
-    ``src_t`` to the logical type JSON ``tgt_t`` BY NESTED FIELD ID
-    (falling back to name at a level where either side lacks fids —
-    legacy epoch-0 nested types). This is what makes nested
+    ``src_t`` to the logical type JSON ``tgt_t`` BY NESTED FIELD ID.
+    This is what makes nested
     rename/drop/widen/add metadata-only: the mapping happens in the
     projection, never by rewriting data.
 
@@ -957,25 +803,10 @@ def _fid_map_expr(expr, src_t, tgt_t, tgt_dtype):
     if json.dumps(src_t, sort_keys=True) == json.dumps(tgt_t, sort_keys=True):
         return expr
     if _is_struct(src_t) and _is_struct(tgt_t):
-        by_fid = {
-            _field_fid(f): f
-            for f in src_t["fields"]
-            if _field_fid(f) is not None
-        }
-        by_name = {f["name"]: f for f in src_t["fields"]}
+        by_fid = {_field_fid(f): f for f in src_t["fields"]}
         subs = []
         for f_json, f_dt in zip(tgt_t["fields"], tgt_dtype.fields):
-            fid = _field_fid(f_json)
-            src_f = by_fid.get(fid) if fid is not None else None
-            if src_f is None:
-                nf = by_name.get(f_json["name"])
-                # name fallback ONLY against a fid-less source field:
-                # a level persisted before nested-fid support predates
-                # nested rames/drops, so its names are identity; a
-                # fid-carrying same-named field is a DIFFERENT column
-                # (drop + re-add) and must stay NULL
-                if nf is not None and (fid is None or _field_fid(nf) is None):
-                    src_f = nf
+            src_f = by_fid.get(_field_fid(f_json))
             if src_f is None:
                 subs.append(
                     F.lit(None).cast(f_dt.dataType).alias(f_json["name"])
@@ -1030,9 +861,7 @@ def _fid_select_exprs(
     """Top-level select list mapping a file epoch's physical fields to
     the endpoint schema by field id — shared by snapshot reads
     (``_read_files``) and the change feed's ``align``."""
-    by_fid = {
-        _field_fid(f): f for f in src_fields if _field_fid(f) is not None
-    }
+    by_fid = {_field_fid(f): f for f in src_fields}
     sel = []
     for tf, tj in zip(schema.fields, target_json["fields"]):
         fid = _field_fid(tj)
@@ -1152,11 +981,10 @@ class VersionedParquetTable:
 
     def _load_root(self, version: int) -> dict:
         """Load ONE root manifest (no shard materialization) and check
-        its layout marker. A manifest without the marker was written by
-        a pre-layout-2 build (d=... partition dirs, basePath-grouped
-        reads): reading it with this code would null-fill partition
-        columns and match no partition filters, so refuse loudly
-        instead of silently corrupting (advice r5)."""
+        its layout marker. A manifest with another marker was written
+        by an older build (see ``_LAYOUT``): reading it with this code
+        would mis-map its columns, so refuse loudly instead of silently
+        corrupting (advice r5)."""
         cached = self._root_cache.get(version)
         if cached is not None:
             return cached
@@ -1317,11 +1145,7 @@ class VersionedParquetTable:
                 for s in frag.split("/")
                 if s
             )
-            sid = (
-                (man.get("file_sids") or {}).get(rel, man.get("schema_id", 0))
-                if "schemas" in man
-                else 0
-            )
+            sid = man["file_sids"].get(rel, man["schema_id"])
             rows.append((rel, shown, rec, sizes[rel], sid))
         schema = StructType(
             [
@@ -1510,7 +1334,15 @@ class VersionedParquetTable:
         writer's orphan shards are unlinked immediately; crash orphans
         are reclaimed by ``vacuum``. Shards and the root are fsynced
         before the link and ``_manifests`` after it, so a version that
-        was published survives a power loss."""
+        was published survives a power loss. A manifest without the
+        schema-epoch keys is refused: every reader maps columns by
+        field id."""
+        missing = [k for k in _EPOCH_KEYS if k not in manifest]
+        if missing:
+            raise ValueError(
+                f"manifest v{manifest['version']} for {self.path} lacks "
+                f"schema-epoch keys {missing}"
+            )
         d = self._manifest_dir()
         os.makedirs(d, exist_ok=True)
         manifest = dict(manifest)
@@ -1963,7 +1795,7 @@ class VersionedParquetTable:
         if not files_list:
             return self.spark.createDataFrame([], schema)
         df = self._apply_deletes(
-            self._read_files(files_list, schema, self._sid_ctx(root)), root
+            self._read_files(files_list, schema, root), root
         )
         if partition_filter:
             # Path pruning is exact only for files whose fragment
@@ -2010,33 +1842,11 @@ class VersionedParquetTable:
     def _carry_epochs(man: dict) -> dict:
         """Schema-epoch keys a metadata-only commit (delete, evolve-
         spec, sync cursor, rollback) copies from its parent manifest
-        unchanged ({} on legacy tables)."""
-        if "schemas" not in man:
-            return {}
-        return {
-            "schema_id": man["schema_id"],
-            "schemas": man["schemas"],
-            "file_sids": man.get("file_sids") or {},
-            "next_fid": man.get("next_fid", _max_fid(man["schemas"]) + 1),
-        }
-
-    @staticmethod
-    def _sid_ctx(root: dict) -> dict | None:
-        """Schema-epoch context of a manifest, or None for a legacy
-        (never rename/drop/widen-evolved) table."""
-        if "schemas" not in root:
-            return None
-        return {
-            "schema_id": root["schema_id"],
-            "schemas": root["schemas"],
-            "file_sids": root.get("file_sids") or {},
-        }
+        unchanged."""
+        return {k: man[k] for k in _EPOCH_KEYS}
 
     def _read_files(
-        self,
-        rels: list[str],
-        schema: StructType,
-        sid_ctx: dict | None = None,
+        self, rels: list[str], schema: StructType, epochs: dict
     ) -> DataFrame:
         """Read an explicit manifest file list pinned to the MANIFEST's
         schema: passing the schema to the reader skips the
@@ -2050,30 +1860,27 @@ class VersionedParquetTable:
         how many commits the snapshot spans — table history depth
         never bloats read plans.
 
-        With ``sid_ctx`` (a manifest carrying schema epochs — see
-        module notes), files group by the epoch they were WRITTEN
-        under and each group's physical columns map to the target
-        ``schema`` BY FIELD ID: renames re-alias, widened types cast,
-        later-added fields null-fill, and a re-added name with a new
-        id never reads a dropped column's bytes. One scan node per
-        live epoch (few — compaction collapses them), each with full
+        ``epochs`` is the manifest listing ``rels`` (any dict with its
+        ``schema_id``/``schemas``/``file_sids`` keys — see module
+        notes): files group by the epoch they were WRITTEN under and
+        each group's physical columns map to the target ``schema`` BY
+        FIELD ID: renames re-alias, widened types cast, later-added
+        fields null-fill, and a re-added name with a new id never
+        reads a dropped column's bytes. One scan node per live epoch
+        (few — compaction collapses them), each with full
         pushdown/pruning; epoch-identical groups skip the projection
         entirely."""
-        if sid_ctx is None:
-            return self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, rel) for rel in rels]
-            )
         target_json = schema.jsonValue()
         target_sig = _schema_signature(target_json)
-        cur_sid = sid_ctx["schema_id"]
-        fs = sid_ctx["file_sids"]
+        cur_sid = epochs["schema_id"]
+        fs = epochs["file_sids"]
         groups: dict[int, list[str]] = {}
         for rel in rels:
             groups.setdefault(fs.get(rel, cur_sid), []).append(rel)
         frames = []
         for sid in sorted(groups):
             paths = [os.path.join(self.path, r) for r in groups[sid]]
-            phys_json = sid_ctx["schemas"][str(sid)]
+            phys_json = epochs["schemas"][str(sid)]
             if _schema_signature(phys_json) == target_sig:
                 frames.append(self.spark.read.schema(schema).parquet(*paths))
                 continue
@@ -2226,76 +2033,15 @@ class VersionedParquetTable:
         root_b = self._load_root(to_v)
         schema = StructType.fromJson(root_b["schema"])
         schema_json = root_b["schema"]
-        ctx_b = self._sid_ctx(root_b)
         empty = self.spark.createDataFrame([], schema)
-
-        def ctx_for(root: dict) -> dict | None:
-            """Epoch context for files listed in ``root``: a legacy
-            manifest inside an epoch-tracked span maps to epoch 0 (its
-            files all predate the fid upgrade, whose epoch-0 schema
-            names them all). Shared epoch ids prefer the ENDPOINT's
-            copy — it carries retrofitted nested fids
-            (_amend_nested_fids) a pre-nested-fid manifest lacks — but
-            ONLY when both copies denote the same epoch: a table that
-            rolled back before epoch ids became globally unique may
-            have re-issued an id for a different schema (advice r8),
-            and substituting across that reuse would read the old
-            files under the wrong physical column names."""
-            if ctx_b is None:
-                return None
-            c = self._sid_ctx(root)
-            if c is None:
-                return {
-                    "schema_id": 0,
-                    "schemas": ctx_b["schemas"],
-                    "file_sids": {},
-                }
-            return {
-                **c,
-                "schemas": _prefer_endpoint_schemas(
-                    c["schemas"], ctx_b["schemas"]
-                ),
-            }
 
         def align(df: DataFrame, src_root: dict) -> DataFrame:
             """Project a frame in ``src_root``'s logical schema to the
-            ENDPOINT schema — by field id when the endpoint tracks
-            epochs (rename/widen/drop-safe; a legacy source root maps
-            through epoch 0, whose names it shares), by name when the
-            whole table is legacy."""
-            if ctx_b is not None:
-                if "schemas" in src_root:
-                    # prefer the ENDPOINT's copy of the source epoch
-                    # (it carries retrofitted nested fids a manifest
-                    # persisted before nested-fid support lacks) —
-                    # unless the id was reused after a rollback for a
-                    # DIFFERENT schema (advice r8): then the source
-                    # manifest's own copy is the correct one
-                    sid = str(src_root["schema_id"])
-                    own = src_root["schema"]
-                    b_copy = ctx_b["schemas"].get(sid)
-                    src_fields = (
-                        b_copy
-                        if b_copy is not None and _same_epoch(b_copy, own)
-                        else own
-                    )["fields"]
-                else:  # pre-upgrade snapshot: epoch 0 names its columns
-                    src_fields = [
-                        f
-                        for f in ctx_b["schemas"]["0"]["fields"]
-                        if f["name"] in df.columns
-                    ]
-                return df.select(
-                    *_fid_select_exprs(src_fields, schema, schema_json)
-                )
-            for f in schema.fields:
-                if f.name not in df.columns:
-                    df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+            ENDPOINT schema by field id (rename/widen/drop-safe)."""
             return df.select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
+                *_fid_select_exprs(
+                    src_root["schema"]["fields"], schema, schema_json
+                )
             )
 
         if plan["mode"] == "snapshot":
@@ -2311,7 +2057,7 @@ class VersionedParquetTable:
             root_a = self._load_root(from_version)
             removed = (
                 self._apply_deletes(
-                    self._read_files(plan["removed"], schema, ctx_for(root_a)),
+                    self._read_files(plan["removed"], schema, root_a),
                     root_b,
                 )
                 if plan["removed"]
@@ -2319,7 +2065,7 @@ class VersionedParquetTable:
             )
             added = (
                 self._apply_deletes(
-                    self._read_files(plan["added"], schema, ctx_b), root_b
+                    self._read_files(plan["added"], schema, root_b), root_b
                 )
                 if plan["added"]
                 else empty
@@ -2357,9 +2103,7 @@ class VersionedParquetTable:
                 step_root = self._load_root(step["version"])
                 if step["added"]:
                     adds.append(
-                        self._read_files(
-                            step["added"], schema, ctx_for(step_root)
-                        )
+                        self._read_files(step["added"], schema, step_root)
                     )
                 if step["removed"]:
                     # apply the PARENT manifest's tombstones: rows that
@@ -2371,9 +2115,7 @@ class VersionedParquetTable:
                             self._read_files(
                                 step["removed"],
                                 schema,
-                                ctx_for(
-                                    self._load_root(step["version"] - 1)
-                                ),
+                                self._load_root(step["version"] - 1),
                             ),
                             {"delete_files": step["parent_deletes"]},
                         )
@@ -2659,30 +2401,27 @@ class VersionedParquetTable:
         files: list[str],
         version: int,
     ) -> dict:
-        """Schema-epoch keys for a DATA commit on an epoch-tracked
-        table ({} for legacy tables — zero overhead until the first
-        rename/drop/widen/add_column). Fields keep their parent fid by
+        """Schema-epoch keys for a DATA commit. The table's first
+        commit mints epoch 0: every field, nested ones included, gets
+        a fresh id. Later commits keep each field's parent fid by
         name; genuinely new columns (merge evolve_schema) get fresh
         ids and bump the epoch. New data files belong to the resulting
         epoch; carried files keep the epoch they were written under
         (sparse map: current-epoch files are omitted)."""
-        if parent is None:
-            return {}
-        p_root = self._load_root(parent)
-        if "schemas" not in p_root:
-            return {}
+        p_root = (
+            self._load_root(parent)
+            if parent is not None
+            else {"schema_id": None, "schemas": {}, "file_sids": {}, "next_fid": 1}
+        )
         p_sid = p_root["schema_id"]
         schemas = dict(p_root["schemas"])
-        p_by_name = {
-            f["name"]: f for f in schemas[str(p_sid)]["fields"]
-        }
-        # monotone across ROLLBACKS too: a restored manifest's schemas
-        # table forgets post-target epochs, but their fids must never
-        # be reissued (a changes() span crossing the rollback would
-        # alias two different columns)
-        counter = {
-            "next": max(p_root.get("next_fid", 0), _max_fid(schemas) + 1)
-        }
+        p_json = schemas.get(str(p_sid), {"fields": []})
+        p_by_name = {f["name"]: f for f in p_json["fields"]}
+        # next_fid is monotone across ROLLBACKS too: a restored
+        # manifest carries the newest next_fid, so fids of forgotten
+        # epochs are never reissued (a changes() span crossing the
+        # rollback would alias two different columns)
+        counter = {"next": p_root["next_fid"]}
 
         def alloc() -> int:
             v = counter["next"]
@@ -2721,20 +2460,20 @@ class VersionedParquetTable:
                 )
         new_json = {**schema_json, "fields": fields}
         next_fid = counter["next"]
-        if _schema_signature(new_json) == _schema_signature(
-            schemas[str(p_sid)]
-        ):
+        if p_sid is not None and _schema_signature(
+            new_json
+        ) == _schema_signature(p_json):
             sid = p_sid
-            new_json = schemas[str(p_sid)]
+            new_json = p_json
         else:
             # globally unique across ALL known epochs, not parent+1:
             # a rollback carries forward post-target epochs precisely
             # so their ids are never re-issued for a different schema
             # (advice r8 — a changes() span crossing the rollback
             # would otherwise read old files under wrong names)
-            sid = max(int(k) for k in schemas) + 1
+            sid = max((int(k) for k in schemas), default=-1) + 1
             schemas[str(sid)] = new_json
-        p_fs = p_root.get("file_sids") or {}
+        p_fs = p_root["file_sids"]
         prefix = f"{_DATA_DIR}/c{version:012d}-"
         file_sids = {}
         for rel in files:
@@ -3465,12 +3204,11 @@ class VersionedParquetTable:
         self, mutate, operation: str, properties: dict | None = None,
         guard=None,
     ) -> int:
-        """Shared core of rename/drop/widen/add_column: upgrade the
-        table to epoch tracking if needed (legacy schema becomes epoch
-        0 with positional field ids; every live file pins to the epoch
-        it was written under), apply ``mutate`` to the current epoch's
-        schema JSON, and publish the result as a METADATA-ONLY commit —
-        no data file is read or written, so evolving a 100 TB table
+        """Shared core of rename/drop/widen/add_column: apply
+        ``mutate`` to the current epoch's schema JSON, pin every live
+        file to the epoch it was written under, and publish the result
+        as a METADATA-ONLY commit — no data file is read or written, so
+        evolving a 100 TB table
         costs one manifest. Reference tables are fixed-schema
         (gcs_bronze_to_silver.py:73-158 DDL), but their Iceberg layer
         allows all four operations; this is the parity surface.
@@ -3518,41 +3256,10 @@ class VersionedParquetTable:
         man = self._load_manifest(parent)
         if guard is not None:
             guard(man)
-        if "schemas" in man:
-            sid = man["schema_id"]
-            schemas = dict(man["schemas"])
-            cur = schemas[str(sid)]
-            abs_sids = {
-                rel: (man.get("file_sids") or {}).get(rel, sid)
-                for rel in man["files"]
-            }
-        else:  # first evolution: upgrade in place
-            sid = 0
-            cur = _with_positional_fids(man["schema"])
-            schemas = {"0": cur}
-            abs_sids = {rel: 0 for rel in man["files"]}
-        next_fid = max(man.get("next_fid", 0), _max_fid(schemas) + 1)
-        # epochs persisted before nested-fid support carry no ids on
-        # nested struct fields — a nested mutation could not track its
-        # target across the epoch boundary (old files would read NULL
-        # for every renamed nested field). Retrofit ids once, for ALL
-        # stored epochs (same-named nested fields across epochs are
-        # the same field: nested rename/drop did not exist yet), and
-        # publish the amended dict with this commit.
-        if any(
-            _needs_nested_fids(s) for s in schemas.values()
-        ):
-            counter = {"next": next_fid}
-
-            def _alloc() -> int:
-                v = counter["next"]
-                counter["next"] += 1
-                return v
-
-            schemas = _amend_nested_fids(schemas, _alloc)
-            cur = schemas[str(sid)]
-            next_fid = counter["next"]
-        new_schema, extra = mutate(dict(cur), next_fid, man)
+        sid = man["schema_id"]
+        schemas = dict(man["schemas"])
+        next_fid = man["next_fid"]
+        new_schema, extra = mutate(dict(schemas[str(sid)]), next_fid, man)
         # globally unique epoch id (see _epoch_state): never re-issue
         # an id a rollback's restored manifest still references
         new_sid = max(int(k) for k in schemas) + 1
@@ -3588,9 +3295,11 @@ class VersionedParquetTable:
                 "schema_id": new_sid,
                 "schemas": schemas,
                 "file_sids": {
-                    rel: s for rel, s in abs_sids.items() if s != new_sid
+                    rel: s
+                    for rel in man["files"]
+                    if (s := man["file_sids"].get(rel, sid)) != new_sid
                 },
-                "next_fid": max(next_fid, _max_fid(schemas) + 1),
+                "next_fid": extra.get("next_fid", next_fid),
                 "files": man["files"],
                 "num_files": man["num_files"],
                 "stats": stats,
@@ -3840,7 +3549,8 @@ class VersionedParquetTable:
                     "container element/key/value types"
                 )
 
-            return _edit_type_path(schema_json, segs, add_leaf, no_type), {}
+            out = _edit_type_path(schema_json, segs, add_leaf, no_type)
+            return out, {"next_fid": counter["next"]}
 
         return self._evolve_commit(mutate, "add-column", properties)
 
@@ -3872,7 +3582,9 @@ class VersionedParquetTable:
             partition_by = self._load_manifest(parent)["partition_by"] or None
         version = (parent or 0) + 1
         files = self._write_commit(df, version, partition_by)
-        staged = self._read_files(files, df.schema)
+        staged = self.spark.read.schema(df.schema).parquet(
+            *[os.path.join(self.path, rel) for rel in files]
+        )
         enforce(staged, rules)
         return self._commit(df, files, parent, partition_by, operation)
 
@@ -4017,9 +3729,7 @@ class VersionedParquetTable:
                 # rewrite under the current spec loses nothing.
                 affected = (
                     self._apply_deletes(
-                        self._read_files(
-                            affected_files, schema, self._sid_ctx(man)
-                        ),
+                        self._read_files(affected_files, schema, man),
                         man,
                     )
                     if affected_files
@@ -4107,10 +3817,8 @@ class VersionedParquetTable:
         (top-level and nested): same fid + new name → rename; same fid
         + widened primitive (incl. array element / map key/value
         innards) → widen; new fid → add (subtree adds collapse into
-        their root); gone fid → drop (subsumed drops skipped). Legacy
-        spans (no epoch tracking on either end — so no rename can have
-        happened) fall back to a by-name diff. Op ORDER is planned
-        collision-free (``_plan_mirror_fid_ops``, advice r8): renames
+        their root); gone fid → drop (subsumed drops skipped). Op ORDER
+        is planned collision-free (``_plan_mirror_fid_ops``, advice r8): renames
         topo-sort within each parent struct (chained a→b, b→c renames
         apply leave-first; an a↔b swap hops through a temp name), a
         drop that frees a taken name runs before the rename needing
@@ -4167,46 +3875,15 @@ class VersionedParquetTable:
                 .dataType.simpleString()
             )
 
-        schema_a = root_a["schema"]
-        if "schemas" in root_b and "schemas" not in root_a:
-            # span crosses the epoch upgrade: the legacy from-version's
-            # fields ARE epoch 0's (the upgrade is name-compatible by
-            # construction), so borrow epoch 0's fids for the diff —
-            # without this a rename in the span would degrade to
-            # drop+add and NULL the replica's old rows
-            names_a = {f["name"] for f in schema_a["fields"]}
-            schema_a = {
-                "fields": [
-                    f
-                    for f in root_b["schemas"]["0"]["fields"]
-                    if f["name"] in names_a
-                ]
-            }
         # ---- PLAN: a pure function of the source's two schemas, so a
         # replayed span regenerates the IDENTICAL op sequence and the
         # per-op (mirror_span, mirror_seq) commit properties below can
         # resume or skip it exactly (advice r8: name-based
         # preconditions alone cannot tell a replayed a<->b swap from a
         # fresh one — replaying it would swap the columns back)
-        if "schemas" not in root_b:
-            # legacy span: add-column evolution only; names are identity
-            plan: list[tuple] = []
-            names_a = {f["name"]: f["type"] for f in schema_a["fields"]}
-            names_b = {
-                f["name"]: f["type"] for f in root_b["schema"]["fields"]
-            }
-            for n, t in names_b.items():
-                if n not in names_a:
-                    plan.append(("add", n, ddl(t)))
-                elif t != names_a[n] and isinstance(t, str):
-                    plan.append(("widen", n, t))
-            for n in names_a:
-                if n not in names_b:
-                    plan.append(("drop", n))
-        else:
-            plan = self._plan_mirror_fid_ops(
-                schema_a, root_b["schema"], ddl
-            )
+        plan = self._plan_mirror_fid_ops(
+            root_a["schema"], root_b["schema"], ddl
+        )
         # ---- APPLY, exactly once per checkpointed span: skip every op
         # this span already committed (resume point from the replica's
         # own properties); the name-based preconditions additionally
@@ -4537,6 +4214,20 @@ class VersionedParquetTable:
         finally:
             release()
 
+    def _span_renames(self, from_version, to_version) -> dict[str, str]:
+        """Top-level old→new column names across a version span,
+        diffed by field id — the key-column fix-up for a replica or
+        feed crossing a rename. Independent of what mirroring actually
+        applied (a replayed span's mirror is a no-op but the keys
+        still need mapping)."""
+
+        def names(version) -> dict[int, str]:
+            root = self._load_root(self._resolve_version(version))
+            return {_field_fid(f): f["name"] for f in root["schema"]["fields"]}
+
+        fa, fb = names(from_version), names(to_version)
+        return {fa[i]: fb[i] for i in fa if i in fb and fa[i] != fb[i]}
+
     def sync_from(
         self,
         source: "VersionedParquetTable",
@@ -4595,28 +4286,10 @@ class VersionedParquetTable:
         # the span may cross source-side schema evolution: replay the
         # same metadata-only ops here first (idempotent) and fix up
         # renamed key columns, or the endpoint-schema feed can't
-        # apply. The rename map diffs the SOURCE's endpoints by field
-        # id — independent of which mirror ops actually applied (a
-        # crash-retry's mirror is a no-op but keys still need mapping).
+        # apply.
         self.mirror_evolution_from(source, cursor, upstream)
-        ra = source._load_root(cursor)
-        rb = source._load_root(upstream)
-        if "schemas" in rb:
-            if "schemas" in ra:
-                fields_a = ra["schema"]["fields"]
-            else:  # span crosses the upgrade: epoch 0 names = legacy
-                names_a = {f["name"] for f in ra["schema"]["fields"]}
-                fields_a = [
-                    f
-                    for f in rb["schemas"]["0"]["fields"]
-                    if f["name"] in names_a
-                ]
-            fa = {_field_fid(f): f["name"] for f in fields_a}
-            fb = {_field_fid(f): f["name"] for f in rb["schema"]["fields"]}
-            renames = {
-                fa[i]: fb[i] for i in fa if i in fb and fa[i] != fb[i]
-            }
-            keys = [renames.get(k, k) for k in keys]
+        renames = source._span_renames(cursor, upstream)
+        keys = [renames.get(k, k) for k in keys]
         feed = source.changes(cursor, upstream)
         if feed.isEmpty():  # churn cancelled out: advance cursor only
             man = self._load_manifest(self.latest_version())
@@ -4675,18 +4348,6 @@ class VersionedParquetTable:
             return parent
         old = self._load_manifest(target)
         cur_root = self._load_root(parent)
-        if "schemas" in cur_root and "schemas" not in old:
-            # restoring a pre-fid-upgrade manifest would strip the
-            # epoch bookkeeping that post-upgrade manifests (still
-            # retained, still time-travelable) depend on for their own
-            # file mappings — refuse rather than corrupt; the restored
-            # STATE is reachable by re-upgrading from that snapshot.
-            raise ValueError(
-                f"version {target} predates this table's schema-id "
-                "upgrade; rollback across the upgrade boundary is not "
-                "supported (read(version=...) + write() restores the "
-                "same state)"
-            )
         # NO optimistic retry here, deliberately: rollback targets a
         # snapshot the CALLER judged good relative to the history they
         # saw. Auto-replaying over a commit that landed mid-call would
@@ -4721,34 +4382,13 @@ class VersionedParquetTable:
                 "bloom": old.get("bloom"),
                 "constraints": cur_root.get("constraints") or {},
                 "properties": {"rollback_of": target},
-                **{
-                    **self._carry_epochs(old),
-                    # fids AND epoch ids stay monotone across the
-                    # restore: post-target epochs are carried forward
-                    # (the restored state's schemas win on a conflict,
-                    # possible only on tables that reused ids before
-                    # ids became globally unique), so neither a fid
-                    # nor a schema id is ever re-issued for different
-                    # content (advice r8)
-                    **(
-                        {
-                            "next_fid": max(
-                                self._carry_epochs(old).get("next_fid", 0),
-                                self._carry_epochs(cur_root).get(
-                                    "next_fid", 0
-                                ),
-                            ),
-                            "schemas": {
-                                **self._carry_epochs(cur_root).get(
-                                    "schemas", {}
-                                ),
-                                **self._carry_epochs(old)["schemas"],
-                            },
-                        }
-                        if "schemas" in old
-                        else {}
-                    ),
-                },
+                **self._carry_epochs(old),
+                # fids AND epoch ids stay monotone across the restore:
+                # post-target epochs are carried forward, so neither a
+                # fid nor a schema id is ever re-issued for different
+                # content (advice r8)
+                "next_fid": max(old["next_fid"], cur_root["next_fid"]),
+                "schemas": {**cur_root["schemas"], **old["schemas"]},
             }
         )
 
@@ -4981,7 +4621,7 @@ class VersionedParquetTable:
             return parent
         schema = StructType.fromJson(man["schema"])
         df = self._apply_deletes(
-            self._read_files(chosen, schema, self._sid_ctx(man)), man
+            self._read_files(chosen, schema, man), man
         )
         sizes = self._file_sizes(chosen)
         frag_bytes: dict[str, int] = {}

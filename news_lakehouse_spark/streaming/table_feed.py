@@ -329,34 +329,6 @@ class TableChangeFeed:
         self._commit(intent["to"], intent["batch_id"])
 
 
-def _span_renames(
-    source: VersionedParquetTable, from_v: int, to_v: int
-) -> dict[str, str]:
-    """Top-level old→new column names across a source version span,
-    diffed by field id — the key-column fix-up for subscriptions
-    crossing a rename. Independent of what mirroring actually applied
-    (a replayed span's mirror is a no-op but the keys still need
-    mapping)."""
-    from news_lakehouse_spark.sources.transaction import _field_fid
-
-    ra = source._load_root(source._resolve_version(from_v))
-    rb = source._load_root(source._resolve_version(to_v))
-    if "schemas" not in rb:
-        return {}
-    if "schemas" in ra:
-        fields_a = ra["schema"]["fields"]
-    else:  # span crosses the epoch upgrade: epoch 0 names = legacy
-        names_a = {f["name"] for f in ra["schema"]["fields"]}
-        fields_a = [
-            f for f in rb["schemas"]["0"]["fields"] if f["name"] in names_a
-        ]
-    fa = {_field_fid(f): f["name"] for f in fields_a}
-    fb = {_field_fid(f): f["name"] for f in rb["schema"]["fields"]}
-    return {
-        fa[i]: fb[i] for i in fa if i in fb and fa[i] != fb[i]
-    }
-
-
 def _last_feed_batch(
     replica: VersionedParquetTable, feed_id: str | None = None
 ) -> int | None:
@@ -450,7 +422,7 @@ def feed_into_replica(
                 span[1],
                 include_partition_spec=mirror_partition_spec,
             )
-            renames = _span_renames(source, span[0], span[1])
+            renames = source._span_renames(span[0], span[1])
             batch_keys = [renames.get(k, k) for k in keys]
             replica.apply_changes(
                 df, batch_keys, order_by=order_by, properties=props

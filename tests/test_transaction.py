@@ -16,6 +16,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from news_lakehouse_spark.sources.transaction import (
+    _EPOCH_KEYS,
     ConcurrentCommitError,
     VersionedParquetTable,
 )
@@ -273,6 +274,15 @@ def test_versioned_compact_preserves_rows_and_history(spark, table):
     assert _rows(table.read()) == before
     # pre-compaction version still time-travels
     assert _rows(table.read(version=v - 1)) == before
+    # a table that never evolves stays at epoch 0 through merges,
+    # appends, deletes and compaction
+    table.append(_df(spark, [(20, "p", 200)]))
+    table.delete_keys(spark.createDataFrame([Row(k=0)]))
+    table.compact()
+    for ver in table.versions():
+        root = table._load_root(ver)
+        assert root["schema_id"] == 0 and root["file_sids"] == {}, ver
+        assert list(root["schemas"]) == ["0"]
 
 
 def test_deterministic_survivor_on_merge(spark, table):
@@ -627,17 +637,29 @@ def test_vacuum_reclaims_dropped_and_orphan_shards(spark, table):
 
 
 def test_layout_marker_refuses_foreign_manifest(spark, table):
+    """No marker (layout 1) and layout 2 (name-mapped manifests without
+    schema-epoch keys) are both refused on read, and a manifest without
+    the epoch keys is refused on publish."""
     import json
 
     table.merge(_df(spark, [(1, "a", 10)]), ["k"])
     p = table._manifest_path(1)
     with open(p) as f:
         man = json.load(f)
-    del man["layout"]
-    with open(p, "w") as f:
-        json.dump(man, f)
-    with pytest.raises(ValueError, match="layout"):
-        table.read()
+    no_marker = {k: v for k, v in man.items() if k != "layout"}
+    layout2 = {
+        **{k: v for k, v in man.items() if k not in _EPOCH_KEYS},
+        "layout": 2,
+    }
+    for foreign in (no_marker, layout2):
+        with open(p, "w") as f:
+            json.dump(foreign, f)
+        with pytest.raises(ValueError, match="layout"):
+            VersionedParquetTable(spark, table.path).read()
+    # and the writer refuses to publish one
+    with pytest.raises(ValueError, match="schema-epoch keys"):
+        table._publish(dict(layout2, version=2, parent=1))
+    assert table.versions() == [1]
 
 
 def test_compact_splits_oversized_partition(spark, table):
@@ -1658,12 +1680,10 @@ def test_evolution_compact_collapses_epochs(spark, table):
     assert table.read().columns == ["k", "d", "amount"]
 
 
-def test_rollback_across_fid_upgrade_refused_but_within_ok(spark, table):
-    table.merge(_df(spark, [(1, "a", 10)]), ["k"])       # v1 legacy
-    table.rename_column("v", "amount")                    # v2 upgrade
+def test_rollback_within_evolution_keeps_fids_monotone(spark, table):
+    table.merge(_df(spark, [(1, "a", 10)]), ["k"])       # v1
+    table.rename_column("v", "amount")                    # v2
     table.merge(spark.createDataFrame([Row(k=2, d="b", amount=20)]), ["k"])  # v3
-    with pytest.raises(ValueError, match="upgrade boundary"):
-        table.rollback(1)
     v = table.rollback(2)
     assert table.read().columns == ["k", "d", "amount"]
     assert _rows(table.read()) == {(1, "a", 10)}
@@ -1703,7 +1723,7 @@ def test_evolve_merge_add_column_on_epoch_tracked_table(spark, table):
     epochs: the added column mints a fresh field id and bumps the
     epoch; files from all three epochs read together."""
     table.merge(_df(spark, [(1, "a", 10), (2, "b", 20)]), ["k"])
-    table.rename_column("v", "amount")  # upgrade to epoch tracking
+    table.rename_column("v", "amount")  # epoch 1
     table.merge(
         spark.createDataFrame(
             [Row(k=2, d="b", amount=99, note="hi"), Row(k=3, d="c", amount=30, note="yo")]
@@ -2021,6 +2041,13 @@ def test_nested_evolution_rename_widen_add_drop(spark, table):
     ARRAY<STRUCT> are metadata-only; old files map by nested field id
     in the read projection."""
     table.merge(_nested_df(spark, [(1, "u1", 1, "x", 10), (2, "u2", 2, "x", 20)]), ["k"])
+    # the first commit mints epoch 0 with fids on nested struct fields
+    root = table._load_root(1)
+    assert root["schema_id"] == 0 and root["file_sids"] == {}
+    comments = next(f for f in root["schema"]["fields"] if f["name"] == "comments")
+    elem_fids = [f["metadata"]["fid"] for f in comments["type"]["elementType"]["fields"]]
+    top_fids = [f["metadata"]["fid"] for f in root["schema"]["fields"]]
+    assert len(set(elem_fids + top_fids)) == len(elem_fids) + len(top_fids) == 6
     files_before = set(table.files_for())
     table.rename_column("comments.element.author", "user")
     table.widen_column("comments.element.score", "bigint")
@@ -2186,87 +2213,6 @@ def test_map_value_struct_evolution(spark, table):
     assert got[1] == {"points": 1, "tag": "x", "extra": None}
 
 
-def test_nested_evolution_on_pre_nested_fid_epochs(spark, table):
-    """Forward compatibility with tables whose epoch tracking predates
-    nested-fid support: their persisted epoch schemas carry NO ids on
-    nested struct fields. The first nested mutation must retrofit ids
-    across ALL stored epochs (same-named nested fields are the same
-    field — nested rename/drop did not exist yet) so old files keep
-    reading correctly through the rename."""
-    import json as _json
-
-    table.merge(_nested_df(spark, [(1, "u1", 1, "x", 10)]), ["k"])
-    table.rename_column("m", "metric")  # top-level: upgrades to epochs
-    table.merge(_nested_df(spark, [(2, "u2", 2, "y", 20)]).withColumnRenamed("m", "metric"), ["k"])
-    # simulate the old on-disk format: strip nested fids everywhere
-    latest = table.latest_version()
-    man_path = table._manifest_path(latest)
-    with open(man_path) as f:
-        man = _json.load(f)
-
-    def strip(t):
-        if isinstance(t, dict) and t.get("type") == "struct":
-            return {
-                **t,
-                "fields": [
-                    {
-                        **fl,
-                        "metadata": {
-                            k: v
-                            for k, v in (fl.get("metadata") or {}).items()
-                            if k != "fid"
-                        },
-                        "type": strip(fl["type"]),
-                    }
-                    for fl in t["fields"]
-                ],
-            }
-        if isinstance(t, dict) and t.get("type") == "array":
-            return {**t, "elementType": strip(t["elementType"])}
-        if isinstance(t, dict) and t.get("type") == "map":
-            return {**t, "valueType": strip(t["valueType"])}
-        return t
-
-    for s in man["schemas"].values():
-        s["fields"] = [
-            {**fl, "type": strip(fl["type"])} for fl in s["fields"]
-        ]
-    man["schema"]["fields"] = [
-        {**fl, "type": strip(fl["type"])} for fl in man["schema"]["fields"]
-    ]
-    os.replace(man_path, man_path + ".bak")
-    with open(man_path, "w") as f:
-        _json.dump(man, f)
-
-    # reads on the stripped format fall back to name matching
-    assert {r["k"] for r in table.read().collect()} == {1, 2}
-    # the nested rename triggers the retrofit and keeps old data
-    table.rename_column("comments.element.author", "user")
-    got = {r["k"]: r["comments"][0].asDict() for r in table.read().collect()}
-    assert got == {
-        1: {"user": "u1", "score": 1, "junk": "x"},
-        2: {"user": "u2", "score": 2, "junk": "y"},
-    }
-    # change feed spanning the retrofit boundary aligns by the
-    # endpoint's amended epochs
-    feed = table.changes(1)
-    assert {
-        (r["k"], r["_change_type"], r["comments"][0]["user"])
-        for r in feed.collect()
-    } == {(2, "insert", "u2")}
-    # and a merge after the retrofit keeps everything consistent
-    table.merge(
-        spark.sql(
-            "SELECT 3 AS k, array(named_struct('user', 'w3', 'score',"
-            " CAST(3 AS INT), 'junk', 'z')) AS comments, 30 AS metric"
-        ),
-        ["k"],
-    )
-    assert {
-        (r["k"], r["comments"][0]["user"]) for r in table.read().collect()
-    } == {(1, "u1"), (2, "u2"), (3, "w3")}
-
-
 def test_map_key_widen_via_pseudo_segment(spark, table):
     """widen_column('m.key', 'bigint'): map<int,_> becomes
     map<bigint,_>; old files' narrow keys cast via transform_keys."""
@@ -2324,53 +2270,6 @@ def test_zorder_clustered_compact_prunes_2d_box(spark, table):
         F.col("x").between(0, 15) & F.col("y").between(0, 15)
     )
     assert got.count() == 256
-
-
-def test_same_epoch_distinguishes_retrofit_from_sid_reuse():
-    """advice r8 (high): the endpoint-copy substitution in changes()
-    must accept a nested-fid retrofit (_amend_nested_fids adds fids
-    and nothing else) but reject a REUSED schema id whose content is
-    a different schema."""
-    from news_lakehouse_spark.sources.transaction import (
-        _prefer_endpoint_schemas,
-        _same_epoch,
-    )
-
-    def schema(nested_fid=None, name="a", fid=1):
-        md = {} if nested_fid is None else {"fid": nested_fid}
-        return {
-            "fields": [
-                {
-                    "name": name,
-                    "type": {
-                        "type": "array",
-                        "elementType": {
-                            "type": "struct",
-                            "fields": [
-                                {
-                                    "name": "s",
-                                    "type": "string",
-                                    "nullable": True,
-                                    "metadata": md,
-                                }
-                            ],
-                        },
-                        "containsNull": True,
-                    },
-                    "nullable": True,
-                    "metadata": {"fid": fid},
-                }
-            ]
-        }
-
-    plain, retro = schema(), schema(nested_fid=7)
-    renamed = schema(nested_fid=7, name="b")
-    refid = schema(nested_fid=7, fid=9)
-    assert _same_epoch(plain, retro)
-    assert not _same_epoch(plain, renamed)
-    assert not _same_epoch(plain, refid)
-    assert _prefer_endpoint_schemas({"1": plain}, {"1": retro})["1"] is retro
-    assert _prefer_endpoint_schemas({"1": plain}, {"1": renamed})["1"] is plain
 
 
 def test_changes_span_crossing_rollback_and_later_evolution(spark, table):
