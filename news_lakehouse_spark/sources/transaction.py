@@ -575,17 +575,19 @@ def _walk_assign_fids(t, alloc):
 
 
 def _graft_nested_fids(new_t, parent_t, alloc):
-    """Carry the parent epoch's nested fids into a freshly-derived type
-    JSON (a merge's DataFrame schema arrives fid-less): match struct
-    subfields BY NAME at each level — the same name-is-identity rule
-    the top level uses for data commits — and allocate fresh ids for
-    genuinely new subfields."""
+    """Carry the parent epoch's nested fids into a data commit's type
+    JSON (a DataFrame schema carries no ids, or another table's):
+    match struct subfields BY NAME at each level — the same
+    name-is-identity rule the top level uses for data commits — and
+    allocate fresh ids for genuinely new subfields, and for a whole
+    subtree whose shape differs from the parent's (string → struct,
+    array<string> → array<struct>)."""
     if _is_struct(new_t) and _is_struct(parent_t):
         p_by_name = {pf["name"]: pf for pf in parent_t["fields"]}
         fields = []
         for f in new_t["fields"]:
             pf = p_by_name.get(f["name"])
-            if pf is None or _field_fid(pf) is None:
+            if pf is None:
                 meta = {**(f.get("metadata") or {}), "fid": alloc()}
                 fields.append(
                     {
@@ -620,7 +622,7 @@ def _graft_nested_fids(new_t, parent_t, alloc):
                 new_t["valueType"], parent_t["valueType"], alloc
             ),
         }
-    return new_t
+    return _walk_assign_fids(new_t, alloc)
 
 
 def _type_at_path(t, segs: list[str]):
@@ -2443,9 +2445,9 @@ class VersionedParquetTable:
                     }
                 )
             else:  # carried column: keep its fid AND its nested fids
-                # (the merge's DataFrame schema arrives fid-less; a
-                # fid-less nested epoch would break the by-id read
-                # mapping for every previously-evolved nested field)
+                # (the DataFrame's own ids, if any, are not this
+                # table's; every epoch's nested fields carry ids, which
+                # the by-id read mapping relies on)
                 fields.append(
                     {
                         **f,
@@ -3991,10 +3993,8 @@ class VersionedParquetTable:
 
             def walk_fields(fields, prefix):
                 for f in fields:
-                    fid = _field_fid(f)
                     path = prefix + f["name"]
-                    if fid is not None:
-                        out[fid] = (path, f["type"])
+                    out[_field_fid(f)] = (path, f["type"])
                     walk_type(f["type"], path)
 
             def walk_type(t, path):

@@ -2100,6 +2100,35 @@ def test_nested_evolution_merge_after_keeps_fids(spark, table):
         None,
     )
     assert fid_of(comments["type"], "user") == fid_of(elem0["type"], "author")
+    # a write that changes a column's shape (string → struct,
+    # array<string> → array<struct>) gives the new subtree fresh ids,
+    # so a nested rename or a nested add afterwards maps old rows by id
+    t2 = VersionedParquetTable(spark, table.path + "_shape")
+    t2.write(spark.sql("SELECT 1 AS k, 'p' AS c, array('q') AS arr"))
+    t2.write(
+        spark.sql(
+            "SELECT 1 AS k, named_struct('a', 'va', 'b', 'vb') AS c,"
+            " array(named_struct('a', 'ea', 'b', 'eb')) AS arr"
+        )
+    )
+    t2.rename_column("c.a", "x")
+    t2.rename_column("arr.element.a", "y")
+    row = t2.read().collect()[0].asDict(recursive=True)
+    assert row["c"] == {"x": "va", "b": "vb"}
+    assert row["arr"] == [{"y": "ea", "b": "eb"}]
+    t2.merge(
+        spark.sql(
+            "SELECT 2 AS k, named_struct('x', 'wa', 'b', 'wb', 'z', 'wz') AS c,"
+            " array(named_struct('y', 'fa', 'b', 'fb')) AS arr"
+        ),
+        ["k"],
+        evolve_schema=True,
+    )
+    got = {r["k"]: r["c"].asDict() for r in t2.read().collect()}
+    assert got == {
+        1: {"x": "va", "b": "vb", "z": None},
+        2: {"x": "wa", "b": "wb", "z": "wz"},
+    }
 
 
 def test_nested_drop_readd_does_not_resurrect(spark, table):
