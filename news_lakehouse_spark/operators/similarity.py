@@ -1303,6 +1303,9 @@ def pq_topk(
             scores = np.zeros((len(qids), len(ids)))
             for j in range(m):
                 scores += lut[:, j, codes[:, j]]
+            # mask each query's own row BEFORE the partial sort, so the
+            # batch holding it still yields `want` other candidates
+            scores[qids[:, None] == ids[None, :]] = -np.inf
             take = min(want, len(ids))
             top = np.argpartition(-scores, take - 1, axis=1)[:, :take]
             out_q, out_n, out_s = [], [], []

@@ -40,8 +40,12 @@ a differently-named segment and are pruned conservatively (kept).
 
 ``bucket`` uses Spark's ``xxhash64`` (not Iceberg's murmur3): values
 hash identically across this engine's write path, bloom sidecars and
-driver-side probes (``_spark_hashes``), which is the property pruning
-needs; cross-ENGINE layout compatibility is explicitly not a goal.
+driver-side probes, which is the property pruning needs; cross-ENGINE
+layout compatibility is explicitly not a goal. Probes hash on the
+driver (``spark_xxhash64``): a Spark-exact XXH64 of the bytes Spark
+hashes for the column's type, so planning a point lookup runs no
+Spark job. A type or value it cannot hash exactly yields ``None`` and
+the file is kept.
 
 Scale notes: every transform is a pure whole-stage-codegen expression
 (no UDF, no shuffle beyond the write's own partitioning); time
@@ -54,11 +58,31 @@ without parsing dates (``fragment_tests``). ``truncate`` on ints and
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import math
 import re
+import struct
 from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 __all__ = [
     "PartitionField",
@@ -66,6 +90,7 @@ __all__ = [
     "field_expr",
     "spec_exprs",
     "fragment_tests",
+    "spark_xxhash64",
 ]
 
 _TRANSFORM_RE = re.compile(r"^\s*(\w+)\s*\(\s*(?:(\d+)\s*,\s*)?(\w+)\s*\)\s*$")
@@ -185,10 +210,151 @@ def spec_exprs(df: DataFrame, fields: list[PartitionField]) -> list[Column]:
     return out
 
 
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_SEED = 42  # F.xxhash64's seed
+_I32 = struct.Struct("<i")
+_I64 = struct.Struct("<q")
+_F32 = struct.Struct("<f")
+_D64 = struct.Struct("<d")
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """Standard XXH64 — what Spark's ``XXH64.hashInt``/``hashLong``/
+    ``hashUnsafeBytes`` compute on little-endian bytes."""
+    n, p = len(data), 0
+    if n >= 32:
+        v = [
+            (seed + _P1 + _P2) & _M64,
+            (seed + _P2) & _M64,
+            seed,
+            (seed - _P1) & _M64,
+        ]
+        while p + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, p)
+            v = [_round(a, x) for a, x in zip(v, lanes)]
+            p += 32
+        h = (
+            _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        ) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while p + 8 <= n:
+        (lane,) = struct.unpack_from("<Q", data, p)
+        h = (_rotl(h ^ _round(0, lane), 27) * _P1 + _P4) & _M64
+        p += 8
+    if p + 4 <= n:
+        (lane,) = struct.unpack_from("<I", data, p)
+        h = (_rotl(h ^ (lane * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        p += 4
+    for b in data[p:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _hashed_bytes(v, dtype: DataType) -> bytes | None:
+    """The bytes Spark's ``xxhash64`` hashes for non-null ``v`` as a
+    ``dtype`` value, or None when the type is not covered or
+    ``createDataFrame`` would not accept ``v`` for it. Accepted Python
+    types mirror PySpark's schema verifier (exact types, so ``True`` is
+    no int); conversion goes through the type's own ``toInternal``."""
+    t = type(dtype)
+    if t in _INT_BITS:
+        half = 1 << (_INT_BITS[t] - 1)
+        if type(v) is not int or not -half <= v < half:
+            return None
+        return (_I64 if t is LongType else _I32).pack(v)
+    if t is BooleanType:
+        return _I32.pack(v) if type(v) is bool else None
+    if t is DateType:
+        if type(v) not in (datetime.date, datetime.datetime):
+            return None
+        return _I32.pack(dtype.toInternal(v))
+    if t in (TimestampType, TimestampNTZType):
+        if type(v) is not datetime.datetime:
+            return None
+        return _I64.pack(dtype.toInternal(v))
+    if t in (FloatType, DoubleType):
+        if type(v) is not float:
+            return None
+        if t is FloatType:
+            try:  # the JVM narrows the pickled double: Double.toFloat
+                (v,) = _F32.unpack(_F32.pack(v))
+            except OverflowError:
+                v = math.copysign(math.inf, v)
+        # ±0.0 hashes as 0; NaN as Java's canonical floatToIntBits /
+        # doubleToLongBits pattern
+        if v == 0.0:
+            return bytes(4 if t is FloatType else 8)
+        if math.isnan(v):
+            return _I32.pack(0x7FC00000) if t is FloatType else _I64.pack(
+                0x7FF8000000000000
+            )
+        return _F32.pack(v) if t is FloatType else _D64.pack(v)
+    if t is StringType:
+        # a non-binary collation hashes its collation key, not the bytes
+        if type(v) is not str or dtype.collation != "UTF8_BINARY":
+            return None
+        return v.encode("utf-8")
+    if t is BinaryType:
+        return bytes(v) if type(v) in (bytes, bytearray) else None
+    if t is DecimalType:
+        if type(v) is not decimal.Decimal or not v.is_finite():
+            return None
+        # Spark: BigDecimal.setScale(scale, HALF_UP), then the
+        # precision check createDataFrame would fail on
+        ctx = decimal.Context(prec=100, rounding=decimal.ROUND_HALF_UP)
+        unscaled = int(v.scaleb(dtype.scale, ctx).to_integral_value(context=ctx))
+        if len(str(abs(unscaled))) > dtype.precision:
+            return None
+        if dtype.precision <= 18:
+            return _I64.pack(unscaled)
+        # BigInteger.toByteArray: minimal big-endian two's complement
+        width = (unscaled if unscaled >= 0 else ~unscaled).bit_length() // 8 + 1
+        return unscaled.to_bytes(width, "big", signed=True)
+    return None
+
+
+def spark_xxhash64(value, dtype: DataType) -> int | None:
+    """``F.xxhash64`` (seed 42) of one ``dtype`` value, computed on the
+    driver: scan planning hashes bloom and bucket probe literals without
+    a Spark job. Null hashes to the seed, as in Spark. Returns None for
+    a type it does not cover (nested, interval, collated strings, …) or
+    a value the type would not accept; callers keep the file then."""
+    if value is None:
+        return _SEED
+    try:
+        data = _hashed_bytes(value, dtype)
+    except (ArithmeticError, OverflowError, ValueError, struct.error):
+        return None  # e.g. a timestamp mktime cannot convert
+    return None if data is None else _xxh64(data, _SEED)
+
+
 def _py_transform(f: PartitionField, v):
     """Driver-side twin of ``field_expr`` for time/truncate transforms
-    (bucket goes through Spark — see fragment_tests). ``v`` is a
-    predicate value (datetime/date/str/int)."""
+    (bucket hashes through ``spark_xxhash64`` — see fragment_tests).
+    ``v`` is a predicate value (datetime/date/str/int)."""
     if f.transform == "years":
         return v.year if hasattr(v, "year") else int(str(v)[:4])
     if f.transform == "months":
@@ -212,7 +378,7 @@ _MONOTONE = {"years", "months", "days", "hours", "truncate"}
 def fragment_tests(
     fields: list[PartitionField],
     predicate: list[tuple],
-    hash_values: Callable[[str, list], list],
+    types: dict[str, DataType],
 ) -> list[tuple[str, Callable]]:
     """Derive fragment-level pruning tests from predicates on RAW
     source columns — the hidden-partitioning payoff: ``WHERE ts
@@ -229,8 +395,10 @@ def fragment_tests(
     zero-padded string forms, numeric for years/int-truncate);
     inequalities widen to the containing partition (< v → <= T(v)),
     conservative by construction. ``bucket`` derives equality/IN only,
-    via ``hash_values`` (the table's Spark-typed xxhash64 probe, so
-    driver and writer hash identically).
+    hashing each value on the driver with ``spark_xxhash64`` under the
+    source column's type in ``types``, so driver and writer hash
+    identically; a value it cannot hash exactly derives no test, and
+    every file is kept.
     """
     by_source: dict[str, list[PartitionField]] = {}
     for f in fields:
@@ -252,9 +420,9 @@ def fragment_tests(
             if f.transform == "bucket":
                 if op in ("=", "==", "in"):
                     vals = list(value) if op == "in" else [value]
-                    hs = [h for h in hash_values(col, vals) if h is not None]
-                    want = {str(h % f.param) for h in hs}
-                    if want:
+                    hs = [spark_xxhash64(v, types[col]) for v in vals]
+                    if hs and None not in hs:
+                        want = {str(h % f.param) for h in hs}
                         tests.append((f.name, lambda s, w=want: s in w))
                 continue
             if f.transform not in _MONOTONE:

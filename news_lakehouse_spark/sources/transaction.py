@@ -103,6 +103,7 @@ from pyspark.sql.types import StructType
 from news_lakehouse_spark.sources.partition_spec import (
     fragment_tests,
     parse_partition_spec,
+    spark_xxhash64,
     spec_exprs,
 )
 
@@ -334,12 +335,6 @@ def _footer_raw_stats(abs_path: str, stat_cols: tuple) -> dict:
         elif rows and nulls == rows:
             per_col[col] = (None, None, nulls, rows)  # all-null file
     return per_col
-
-
-# (type-json, value) -> xxhash64 — see VersionedParquetTable._spark_hashes.
-# A pure-function memo (hash of a literal), NOT result caching: entries
-# are deterministic values independent of any table's data.
-_SPARK_HASH_MEMO: dict = {}
 
 
 def _materialize_churn(df: DataFrame):
@@ -1625,21 +1620,20 @@ class VersionedParquetTable:
             # HIDDEN-partitioning pruning: a predicate on a transform's
             # RAW source column derives a fragment test on the derived
             # partition field (days/months/…: rendered-value range;
-            # bucket: Spark-typed hash equality) — the query never
+            # bucket: driver-side xxhash64 equality) — the query never
             # names the partition field, exactly Iceberg's contract.
             # Conservative: files lacking the segment (older spec) or
             # with underivable values are kept; stats pruning below
             # still applies independently.
             pfields = parse_partition_spec(root["partition_by"])
             if any(f.transform != "identity" for f in pfields):
-                sch_fields = {
-                    f.name: f
-                    for f in StructType.fromJson(root["schema"]).fields
-                }
                 ftests = fragment_tests(
                     pfields,
                     predicate,
-                    lambda c, vals: self._spark_hashes(vals, sch_fields[c]),
+                    {
+                        f.name: f.dataType
+                        for f in StructType.fromJson(root["schema"]).fields
+                    },
                 )
                 if ftests:
                     unesc = _unescape_fn(self.spark)
@@ -1704,12 +1698,11 @@ class VersionedParquetTable:
                     for col, op, value in eq:
                         vals = list(value) if op == "in" else [value]
                         hashes = [
-                            h
-                            for h in self._spark_hashes(vals, fields[col])
-                            if h is not None
+                            spark_xxhash64(v, fields[col].dataType)
+                            for v in vals
                         ]
-                        if not hashes:
-                            continue
+                        if not hashes or None in hashes:
+                            continue  # a value not hashable exactly: keep
 
                         def may_contain(rel):
                             ent = side.get(rel, {}).get(col)
@@ -2174,8 +2167,10 @@ class VersionedParquetTable:
     def _bloom_positions(h: int, bits: int, k: int) -> list[int]:
         """k bit positions from one xxhash64 value, by double hashing.
         The arithmetic mirrors the Spark expressions in
-        ``_build_bloom_sidecar`` exactly (unsigned shift + pmod), so a
-        driver-side probe tests the same bits an executor set."""
+        ``_build_bloom_sidecar`` exactly (unsigned shift + pmod), and
+        the probe value is hashed on the driver by ``spark_xxhash64``
+        (a Spark-exact XXH64), so a probe tests the same bits an
+        executor set without running a job."""
         u = h & 0xFFFFFFFFFFFFFFFF
         h1 = u >> 33
         h2 = u % (1 << 31)
@@ -2192,7 +2187,9 @@ class VersionedParquetTable:
         clustered on it; a bloom prunes regardless of layout, which is
         what an id-lookup over an 800k-file table needs. Sidecars load
         lazily and ONLY when an equality predicate on a bloom column
-        reaches ``files_for``."""
+        reaches ``files_for``, which hashes the probe values on the
+        driver (``spark_xxhash64``); a column type or value it cannot
+        hash exactly keeps every file."""
         min_bits, k = int(cfg["bits"]), int(cfg["k"])
         abs_paths = [os.path.join(self.path, f) for f in files]
         if not abs_paths:
@@ -2311,38 +2308,6 @@ class VersionedParquetTable:
             except FileNotFoundError:
                 continue  # vacuumed sidecar: those files keep (no prune)
         return out
-
-    def _spark_hashes(self, values: list, field) -> list[int]:
-        """xxhash64 of probe values THROUGH SPARK with the column's
-        exact type, so driver-side probes hash identically to the
-        commit job (a Python reimplementation could diverge per type).
-
-        Memoized per (type, value): xxhash64 is a pure deterministic
-        function, yet each probe formerly paid a ~0.3 s Spark job for
-        a handful of literals — and scan planning hashes the same
-        predicate values on every read (the r12 job profile showed two
-        such jobs per bucket-pruned query). Only values NOT yet seen
-        go through a (single) Spark job."""
-        from pyspark.sql.types import StructField, StructType as _ST
-
-        tkey = field.dataType.json()
-        try:
-            missing = [
-                v for v in values if (tkey, v) not in _SPARK_HASH_MEMO
-            ]
-        except TypeError:  # unhashable probe value: skip memoization
-            schema = _ST([StructField("v", field.dataType, True)])
-            df = self.spark.createDataFrame([(v,) for v in values], schema)
-            return [r[0] for r in df.select(F.xxhash64("v")).collect()]
-        if missing:
-            schema = _ST([StructField("v", field.dataType, True)])
-            df = self.spark.createDataFrame(
-                [(v,) for v in missing], schema
-            )
-            hashes = [r[0] for r in df.select(F.xxhash64("v")).collect()]
-            for v, h in zip(missing, hashes):
-                _SPARK_HASH_MEMO[(tkey, v)] = h
-        return [_SPARK_HASH_MEMO[(tkey, v)] for v in values]
 
     def _commit(
         self,

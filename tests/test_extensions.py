@@ -1398,7 +1398,9 @@ def test_hard_negative_mining_excludes_same_label(spark, sf_dir):
 
 def test_pq_lossless_codebook_equals_bruteforce(spark):
     """m=1 with one centroid per distinct vector makes PQ encoding
-    lossless, so ADC ranking must equal exact brute force."""
+    lossless, so ADC ranking must equal exact brute force — at any
+    batch layout: the batch holding a query must still yield k other
+    candidates once the query's own row is excluded."""
     import math
 
     from news_lakehouse_spark.operators.similarity import (
@@ -1419,15 +1421,18 @@ def test_pq_lossless_codebook_equals_bruteforce(spark):
     # 8 distinct vectors, 8 centroids: every vector quantizes to itself
     assert len({tuple(r["codes"]) for r in got}) == 8
 
-    adc = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in pq_topk(codes, df, books, k=3).collect()
-    }
     exact = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
         for r in cosine_topk_bruteforce(df, df, k=3).collect()
     }
-    assert adc == exact
+    for parts in (2, 4):
+        adc = {
+            (r["query_id"], r["rank"]): r["neighbor_id"]
+            for r in pq_topk(
+                codes.repartitionByRange(parts, "vec_id"), df, books, k=3
+            ).collect()
+        }
+        assert adc == exact, parts
 
 
 def test_pq_topk_chunked_fallback_matches_single_lut(spark, sf_dir):

@@ -1028,6 +1028,143 @@ def test_bloom_sidecar_driver_bytes_flat_in_distinct_count(spark, tmp_path):
     assert sizes["small"] == sizes["big"]
 
 
+def test_driver_xxhash64_matches_spark(spark, tmp_path):
+    """Bloom and bucket probes hash their literals on the driver:
+    ``spark_xxhash64`` must equal ``F.xxhash64`` on every covered type,
+    edge values and nulls included (all columns in one Spark job). An
+    uncovered type or a value the type would not accept hashes to None,
+    and a bloomed column of an uncovered type keeps every file."""
+    import datetime as dt
+    from decimal import Decimal as D
+
+    from pyspark.sql import types as T
+
+    from news_lakehouse_spark.sources.partition_spec import spark_xxhash64
+
+    nan, inf = float("nan"), float("inf")
+    ints = [0, 1, -1, 7, 127, -128]
+    cases = {
+        T.BooleanType(): [True, False],
+        T.ByteType(): ints,
+        T.ShortType(): ints + [32767, -32768],
+        T.IntegerType(): ints + [2**31 - 1, -(2**31)],
+        T.LongType(): ints + [2**63 - 1, -(2**63), 2**40 + 3],
+        T.FloatType(): [0.0, -0.0, 0.1, -2.25, nan, inf, -inf, 1e300, -1e-50, 1e-45],
+        T.DoubleType(): [0.0, -0.0, 0.1, nan, -nan, inf, -1e-300, 5e-324],
+        T.StringType(): [
+            "", "a", "x" * 31, "y" * 32, "z" * 33, "w" * 100,
+            "héllo ✓ 日本語", "😀" * 9,
+        ],
+        T.BinaryType(): [b"", b"\x00", bytes(range(40)), bytearray(b"abcdefgh")],
+        T.DateType(): [
+            dt.date(1, 1, 1), dt.date(1970, 1, 1), dt.date(2024, 2, 29),
+            dt.date(9999, 12, 31),
+        ],
+        T.TimestampType(): [
+            dt.datetime(1970, 1, 1),
+            dt.datetime(2024, 3, 1, 12, 30, 45, 123456),
+            dt.datetime(2024, 3, 1, 12, 30, tzinfo=dt.timezone.utc),
+            dt.datetime(9999, 12, 31, 23, 59, 59, 999999),
+        ],
+        T.TimestampNTZType(): [
+            dt.datetime(1, 1, 1),
+            dt.datetime(2024, 3, 1, 12, 30, 45, 123456),
+            dt.datetime(9999, 12, 31, 23, 59, 59),
+        ],
+        T.DecimalType(10, 2): [D("0"), D("-1.5"), D("12345678.99"), D("1.005")],
+        T.DecimalType(38, 6): [
+            D("-1.5"), D("127"), D("-128"), D("-0.000001"),
+            D("-123456789012345678901234567890.123456"),
+        ],
+    }
+    types = list(cases)
+    n = max(map(len, cases.values())) + 1  # every column ends in nulls
+    rows = [
+        tuple(vals[r] if r < len(vals) else None for vals in cases.values())
+        for r in range(n)
+    ]
+    schema = T.StructType(
+        [T.StructField(f"c{i}", t) for i, t in enumerate(types)]
+    )
+    got = (
+        spark.createDataFrame(rows, schema)
+        .select(*[F.xxhash64(f"c{i}") for i in range(len(types))])
+        .collect()
+    )
+    for row, hashed in zip(rows, got):
+        for v, t, h in zip(row, types, hashed):
+            assert spark_xxhash64(v, t) == h, (t, v)
+    # not hashable exactly → None (the caller keeps the file)
+    for v, t in [
+        (dt.timedelta(seconds=7), T.DayTimeIntervalType()),
+        ([1, 2], T.ArrayType(T.LongType())),
+        ("a", T.StringType("UTF8_LCASE")),
+        ("7", T.LongType()),
+        (True, T.IntegerType()),
+        (2**31, T.IntegerType()),
+        (7, T.DoubleType()),
+        (D("1e20"), T.DecimalType(10, 2)),
+        ("2024-01-01", T.DateType()),
+    ]:
+        assert spark_xxhash64(v, t) is None, (t, v)
+    t = VersionedParquetTable(spark, str(tmp_path / "iv"))
+    df = spark.range(40).select(
+        F.expr("make_dt_interval(0, 0, 0, id)").alias("c"), F.col("id").alias("v")
+    )
+    t.write(df.repartition(4), bloom_columns=["c"])
+    probe = [("c", "=", dt.timedelta(seconds=7))]
+    assert sorted(t.files_for(predicate=probe)) == sorted(t.files_for())
+    got = t.read(predicate=probe).filter(F.col("c") == F.lit(dt.timedelta(seconds=7)))
+    assert _rows(got.select("v")) == {(7,)}
+
+
+def test_probe_planning_runs_no_spark_job(spark, tmp_path):
+    """Scan planning hashes probe keys on the driver: ``files_for`` on
+    keys never probed before runs no Spark job for a bloom or a
+    ``bucket(4, c)`` equality/IN predicate, and a point lookup runs
+    only the jobs of its collect."""
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    t = VersionedParquetTable(spark, str(tmp_path / "pj"))
+    base = 5_000_000  # keys no other test probes
+    df = spark.range(400).select(
+        (F.col("id") + base).alias("k"),
+        (F.col("id") % 37 + base).alias("cust"),
+        F.col("id").alias("v"),
+    )
+    t.write(
+        df.orderBy(F.xxhash64("k")).repartition(4),
+        partition_by=["bucket(4, cust)"],
+        bloom_columns=["k"],
+    )
+    all_files = t.files_for()
+    for name, pred in [
+        ("bloom", [("k", "=", base + 123)]),
+        ("bucket_eq", [("cust", "=", base + 11)]),
+        ("bucket_in", [("cust", "in", [base + 3, base + 29])]),
+    ]:
+        kept, n = jobs(f"probe_{name}", lambda: t.files_for(predicate=pred))
+        assert n == 0, name
+        assert 0 < len(kept) < len(all_files), name
+    got, n_lookup = jobs(
+        "probe_lookup",
+        lambda: t.read(predicate=[("k", "=", base + 391)]).collect(),
+    )
+    assert {r["v"] for r in got if r["k"] == base + 391} == {391}
+    planned = t.read(predicate=[("k", "=", base + 392)])
+    _, n_collect = jobs("probe_collect", planned.collect)
+    assert n_lookup == n_collect
+
+
 # --- round 6: CDC apply (change feed -> replica) --------------------------
 
 
