@@ -303,15 +303,11 @@ def _hashed_bytes(v, dtype: DataType) -> bytes | None:
                 (v,) = _F32.unpack(_F32.pack(v))
             except OverflowError:
                 v = math.copysign(math.inf, v)
-        # ±0.0 hashes as 0; NaN as Java's canonical floatToIntBits /
-        # doubleToLongBits pattern
         if v == 0.0:
-            return bytes(4 if t is FloatType else 8)
-        if math.isnan(v):
-            return _I32.pack(0x7FC00000) if t is FloatType else _I64.pack(
-                0x7FF8000000000000
-            )
-        return _F32.pack(v) if t is FloatType else _D64.pack(v)
+            v = 0.0  # -0.0 hashes as 0
+        elif math.isnan(v):
+            v = math.nan  # Java's canonical floatToIntBits/doubleToLongBits
+        return (_F32 if t is FloatType else _D64).pack(v)
     if t is StringType:
         # a non-binary collation hashes its collation key, not the bytes
         if type(v) is not str or dtype.collation != "UTF8_BINARY":
@@ -323,11 +319,11 @@ def _hashed_bytes(v, dtype: DataType) -> bytes | None:
         if type(v) is not decimal.Decimal or not v.is_finite():
             return None
         # Spark: BigDecimal.setScale(scale, HALF_UP), then the
-        # precision check createDataFrame would fail on
-        ctx = decimal.Context(prec=100, rounding=decimal.ROUND_HALF_UP)
-        unscaled = int(v.scaleb(dtype.scale, ctx).to_integral_value(context=ctx))
-        if len(str(abs(unscaled))) > dtype.precision:
-            return None
+        # precision check createDataFrame would fail on — quantize
+        # raises InvalidOperation past the context's precision
+        ctx = decimal.Context(prec=dtype.precision, rounding=decimal.ROUND_HALF_UP)
+        q = v.quantize(decimal.Decimal(1).scaleb(-dtype.scale), context=ctx)
+        unscaled = int(q.scaleb(dtype.scale, ctx))
         if dtype.precision <= 18:
             return _I64.pack(unscaled)
         # BigInteger.toByteArray: minimal big-endian two's complement
@@ -346,7 +342,7 @@ def spark_xxhash64(value, dtype: DataType) -> int | None:
         return _SEED
     try:
         data = _hashed_bytes(value, dtype)
-    except (ArithmeticError, OverflowError, ValueError, struct.error):
+    except (ArithmeticError, ValueError):
         return None  # e.g. a timestamp mktime cannot convert
     return None if data is None else _xxh64(data, _SEED)
 

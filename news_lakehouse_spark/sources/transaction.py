@@ -1688,8 +1688,8 @@ class VersionedParquetTable:
                 ]
                 if eq:
                     side = self._load_bloom_files(bloom)
-                    fields = {
-                        f.name: f
+                    types = {
+                        f.name: f.dataType
                         for f in StructType.fromJson(root["schema"]).fields
                     }
                     k = int(bloom["k"])
@@ -1697,10 +1697,7 @@ class VersionedParquetTable:
 
                     for col, op, value in eq:
                         vals = list(value) if op == "in" else [value]
-                        hashes = [
-                            spark_xxhash64(v, fields[col].dataType)
-                            for v in vals
-                        ]
+                        hashes = [spark_xxhash64(v, types[col]) for v in vals]
                         if not hashes or None in hashes:
                             continue  # a value not hashable exactly: keep
 
