@@ -65,6 +65,7 @@ from news_lakehouse_spark.sources.transaction import (
     VersionedParquetTable,
     _file_partition_fragment,
     _frag_columns,
+    schema_from_json,
 )
 
 __all__ = ["storage_partitioned_join", "storage_partitioned_agg"]
@@ -155,7 +156,7 @@ def _spj_plan(
     if v is None:
         raise FileNotFoundError(f"no committed version at {table.path}")
     root = table._load_root(v)
-    schema = StructType.fromJson(root["schema"])
+    schema = schema_from_json(root["schema"])
     files = table.files_for(v, predicate=predicate)
     bf = _bucket_field(root, keys)
     if bf is None:

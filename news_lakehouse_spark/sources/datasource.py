@@ -101,6 +101,7 @@ from .transaction import (
     _decimal_widening_ok,
     _field_fid,
     _strip_nested_fids,
+    schema_from_json,
 )
 
 
@@ -389,7 +390,7 @@ def _validate_sink_schema(path: str, schema_json: str) -> None:
         )
     want = [
         (f.name, _norm_type(f.dataType.simpleString()))
-        for f in StructType.fromJson(root["schema"]).fields
+        for f in schema_from_json(root["schema"]).fields
     ]
     got = [
         (f.name, _norm_type(f.dataType.simpleString()))
@@ -548,7 +549,7 @@ class VersionedTableDataSource(DataSource):
                 f"versioned_table: no committed version at "
                 f"{self.options['path']}"
             )
-        return StructType.fromJson(t._load_root(v)["schema"])
+        return schema_from_json(t._load_root(v)["schema"])
 
     def _schema_json(self) -> str:
         return json.dumps(self.schema().jsonValue())

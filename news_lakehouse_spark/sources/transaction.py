@@ -47,7 +47,11 @@ per-commit so a feed across a delete emits exactly the tombstoned rows.
 Named refs: ``tag(name)`` pins a version (``read(version="prod")``);
 ``vacuum`` retains tagged versions. Bloom sidecars (``write(...,
 bloom_columns=[...])``, the Iceberg puffin analog) give point-lookup
-file pruning that min/max bounds can't on unclustered keys.
+file pruning that min/max bounds can't on unclustered keys. Each data
+commit builds one sidecar over the files it wrote in one grouped pass,
+sizing each file's bitmap from that file's distinct keys; the sidecar
+stores its hash count k, and a manifest lists only the sidecars of
+commits that still have a live file.
 
 Partition-spec evolution: ``set_partition_spec`` is a metadata-only
 commit; mixed-layout snapshots read correctly (conservative path
@@ -119,6 +123,13 @@ _DATA_DIR = "data"
 # guessing.
 _LAYOUT = 3
 _EPOCH_KEYS = ("schema_id", "schemas", "file_sids", "next_fid")
+
+# Bloom sidecars: k bit positions per key, and at least this many bits
+# per distinct key in a file (~1.2% false positives at k=4), rounded
+# up to a power of two between 64 and 2^24 bits.
+_BLOOM_K = 4
+_BLOOM_BITS_PER_KEY = 10
+_BLOOM_MAX_BITS = 1 << 24
 
 # Shard the manifest's file list per partition fragment once it grows
 # past this many files: an 800k-file table stays readable without one
@@ -522,6 +533,17 @@ def _decimal_widening_ok(cur: str, tgt: str) -> bool:
 
 def _field_fid(field_json: dict) -> int | None:
     return (field_json.get("metadata") or {}).get("fid")
+
+
+def schema_from_json(schema_json: dict) -> StructType:
+    """Parse a manifest's schema JSON without touching it. PySpark's
+    ``StructField.fromJson`` rewrites a collated string's
+    ``__COLLATIONS`` metadata in the dict it parses, and manifest roots
+    are cached and shared: parsing the original would break the next
+    parse of the same root and leak into any commit that copies it."""
+    import copy
+
+    return StructType.fromJson(copy.deepcopy(schema_json))
 
 
 # --- nested types (r8): struct fields carry fids too, so rename/drop/
@@ -994,6 +1016,8 @@ class VersionedParquetTable:
                 f"{_LAYOUT}; rewrite the table (read with the matching "
                 "build, then write()) to migrate"
             )
+        # the current schema is stored once, as its epoch's entry
+        man["schema"] = man["schemas"][str(man["schema_id"])]
         if len(self._root_cache) >= 128:  # bounded: drop oldest entry
             self._root_cache.pop(next(iter(self._root_cache)))
         self._root_cache[version] = man
@@ -1343,6 +1367,7 @@ class VersionedParquetTable:
         d = self._manifest_dir()
         os.makedirs(d, exist_ok=True)
         manifest = dict(manifest)
+        manifest.pop("schema", None)  # _load_root derives it from schemas
         manifest["layout"] = _LAYOUT
         shard_paths: list[str] = []
         if (
@@ -1595,7 +1620,7 @@ class VersionedParquetTable:
         if partition_filter:
             spec = root["partition_by"]
             names = {
-                f.name for f in StructType.fromJson(root["schema"]).fields
+                f.name for f in schema_from_json(root["schema"]).fields
             } | {f.name for f in parse_partition_spec(spec)}
             # Under spec evolution a filter column may be in an OLDER
             # spec only (prunes that era's files) or the current one
@@ -1632,7 +1657,7 @@ class VersionedParquetTable:
                     predicate,
                     {
                         f.name: f.dataType
-                        for f in StructType.fromJson(root["schema"]).fields
+                        for f in schema_from_json(root["schema"]).fields
                     },
                 )
                 if ftests:
@@ -1690,9 +1715,8 @@ class VersionedParquetTable:
                     side = self._load_bloom_files(bloom)
                     types = {
                         f.name: f.dataType
-                        for f in StructType.fromJson(root["schema"]).fields
+                        for f in schema_from_json(root["schema"]).fields
                     }
-                    k = int(bloom["k"])
                     import base64
 
                     for col, op, value in eq:
@@ -1702,7 +1726,8 @@ class VersionedParquetTable:
                             continue  # a value not hashable exactly: keep
 
                         def may_contain(rel):
-                            ent = side.get(rel, {}).get(col)
+                            k, cols = side.get(rel, (0, {}))
+                            ent = cols.get(col)
                             if ent is None:
                                 return True  # no bloom → keep
                             bm = base64.b64decode(ent["b"])
@@ -1782,7 +1807,7 @@ class VersionedParquetTable:
         if v is None:
             raise FileNotFoundError(f"no committed version at {self.path}")
         root = self._load_root(v)
-        schema = StructType.fromJson(root["schema"])
+        schema = schema_from_json(root["schema"])
         files_list = self.files_for(v, partition_filter, predicate)
         if not files_list:
             return self.spark.createDataFrame([], schema)
@@ -1876,7 +1901,7 @@ class VersionedParquetTable:
             if _schema_signature(phys_json) == target_sig:
                 frames.append(self.spark.read.schema(schema).parquet(*paths))
                 continue
-            phys = StructType.fromJson(phys_json)
+            phys = schema_from_json(phys_json)
             raw = self.spark.read.schema(phys).parquet(*paths)
             # by-nested-field-id projection: renames re-alias, widened
             # types cast, added fields (top-level OR inside a struct/
@@ -2023,7 +2048,7 @@ class VersionedParquetTable:
         to_v = self.latest_version() if to_v is None else to_v
         plan = self.changes_plan(from_version, to_v)
         root_b = self._load_root(to_v)
-        schema = StructType.fromJson(root_b["schema"])
+        schema = schema_from_json(root_b["schema"])
         schema_json = root_b["schema"]
         empty = self.spark.createDataFrame([], schema)
 
@@ -2163,131 +2188,90 @@ class VersionedParquetTable:
     @staticmethod
     def _bloom_positions(h: int, bits: int, k: int) -> list[int]:
         """k bit positions from one xxhash64 value, by double hashing.
-        The arithmetic mirrors the Spark expressions in
-        ``_build_bloom_sidecar`` exactly (unsigned shift + pmod), and
-        the probe value is hashed on the driver by ``spark_xxhash64``
-        (a Spark-exact XXH64), so a probe tests the same bits an
-        executor set without running a job."""
+        The arithmetic mirrors the numpy packing in
+        ``_build_bloom_sidecar`` exactly (unsigned shift, then mod),
+        and the probe value is hashed on the driver by
+        ``spark_xxhash64`` (a Spark-exact XXH64), so a probe tests the
+        same bits an executor set without running a job."""
         u = h & 0xFFFFFFFFFFFFFFFF
         h1 = u >> 33
         h2 = u % (1 << 31)
         return [(h1 + i * h2) % bits for i in range(k)]
 
     def _build_bloom_sidecar(
-        self, files: list[str], cfg: dict, version: int
+        self,
+        files: list[str],
+        columns: list[str],
+        schema: StructType,
+        version: int,
     ) -> str | None:
-        """One Spark job computes a per-file bloom bitmap for each
-        configured column over the given (newly written) files; bitmaps
-        are base64-packed into a sidecar JSON next to the manifests —
-        the Iceberg puffin analog. Min/max bounds cannot prune a point
-        lookup on a high-cardinality column unless the table is
-        clustered on it; a bloom prunes regardless of layout, which is
-        what an id-lookup over an 800k-file table needs. Sidecars load
-        lazily and ONLY when an equality predicate on a bloom column
-        reaches ``files_for``, which hashes the probe values on the
-        driver (``spark_xxhash64``); a column type or value it cannot
-        hash exactly keeps every file."""
-        min_bits, k = int(cfg["bits"]), int(cfg["k"])
-        abs_paths = [os.path.join(self.path, f) for f in files]
-        if not abs_paths:
+        """One grouped pass per bloom column builds a bloom bitmap for
+        each of the given (newly written) files; a sidecar JSON next to
+        the manifests stores them with their hash count k — the Iceberg
+        puffin analog. Min/max bounds cannot prune a point lookup on a
+        high-cardinality column unless the table is clustered on it; a
+        bloom prunes regardless of layout, which is what an id-lookup
+        over an 800k-file table needs.
+
+        The pass hashes every non-null value with Spark's ``xxhash64``
+        and groups the hashes by file. Per file, numpy takes the
+        distinct hashes, sizes the bitmap to the smallest power of two
+        holding ``_BLOOM_BITS_PER_KEY`` bits per distinct key (64 to
+        ``_BLOOM_MAX_BITS``), sets the ``_BLOOM_K`` positions of each
+        hash (``_bloom_positions``' arithmetic) and packs it
+        executor-side, so the driver receives m/8 bytes per file, never
+        the hashes. Sidecars load lazily and ONLY when an equality
+        predicate on a bloom column reaches ``files_for``, which hashes
+        the probe values on the driver (``spark_xxhash64``); a column
+        type or value it cannot hash exactly keeps every file."""
+        from urllib.parse import unquote, urlparse
+
+        if not files:
             return None
-        df = self.spark.read.parquet(*abs_paths)
-        per_file: dict[str, dict[str, dict]] = {}
-        prefix = "file:"
+        k, per_key, max_bits = _BLOOM_K, _BLOOM_BITS_PER_KEY, _BLOOM_MAX_BITS
+
+        def pack(pdf):
+            import base64
+
+            import numpy as np
+            import pandas as pd
+
+            u = np.unique(pdf["h"].to_numpy()).view(np.uint64)
+            m = 64
+            while m < per_key * len(u) and m < max_bits:
+                m <<= 1
+            h1, h2 = u >> np.uint64(33), u % np.uint64(1 << 31)
+            bitmap = np.zeros(m // 8, dtype=np.uint8)
+            for i in range(k):
+                p = (h1 + np.uint64(i) * h2) % np.uint64(m)
+                bits = (1 << (p % 8)).astype(np.uint8)
+                np.bitwise_or.at(bitmap, p // 8, bits)
+            packed = base64.b64encode(bitmap.tobytes()).decode("ascii")
+            return pd.DataFrame(
+                {"f": [pdf["f"].iloc[0]], "m": [m], "b": [packed]}
+            )
+
+        cols = [c for c in columns if c in schema.names]
+        df = self.spark.read.schema(
+            StructType([schema[c] for c in cols])
+        ).parquet(*[os.path.join(self.path, f) for f in files])
         root_abs = os.path.abspath(self.path)
-
-        def to_rel(path: str) -> str:
-            if path.startswith(prefix):
-                path = path[len(prefix):]
-                while path.startswith("//"):
-                    path = path[1:]
-            return os.path.relpath(path, root_abs)
-
-        for col in cfg["columns"]:
-            if col not in df.columns:
-                continue
-            # Per-FILE bitmap sizing from an approx-distinct pre-pass:
-            # a fixed size saturates on big files (19k distinct in
-            # 64Kbit ≈ 22% FP per probe — no pruning at all), so each
-            # file gets the next power of two ≥ 10 bits/distinct
-            # (~1.2% FP at k=4). Files sharing a size are bloomed in
-            # one job; distinct sizes are few because they're powers
-            # of two.
-            sizes = (
+        per_file: dict[str, dict[str, dict]] = {}
+        for col in cols:
+            rows = (
                 df.where(F.col(col).isNotNull())
-                .groupBy(F.input_file_name().alias("__f"))
-                .agg(F.approx_count_distinct(col).alias("n"))
+                .select(
+                    F.input_file_name().alias("f"), F.xxhash64(col).alias("h")
+                )
+                .groupBy("f")
+                .applyInPandas(pack, "f string, m long, b string")
                 .collect()
             )
-            by_m: dict[int, list[str]] = {}
-            for r in sizes:
-                m = min_bits
-                while m < 10 * r["n"] and m < (1 << 24):
-                    m <<= 1
-                by_m.setdefault(m, []).append(r["__f"])
-            for m, uris in by_m.items():
-                sub = self.spark.read.parquet(
-                    *[
-                        os.path.join(self.path, to_rel(u))
-                        for u in uris
-                    ]
-                )
-                h = F.xxhash64(F.col(col))
-                h1 = F.shiftrightunsigned(h, 33)
-                h2 = F.pmod(h, F.lit(1 << 31))
-                positions = F.array(
-                    *[
-                        F.pmod(h1 + F.lit(i) * h2, F.lit(m)).cast("int")
-                        for i in range(k)
-                    ]
-                )
-                # Pack the bitmap EXECUTOR-side: the driver receives
-                # m/8 base64 bytes per file, never the k*n_distinct
-                # position lists (GBs for a big table at m=2^24) that
-                # a collect_set would ship. One group per file; numpy
-                # sets all bits in a vectorized pass.
-                m_local = m
-
-                def _pack(pdf):
-                    import base64 as _b64
-
-                    import numpy as _np
-                    import pandas as _pd
-
-                    bitmap = _np.zeros(m_local // 8, dtype=_np.uint8)
-                    p = pdf["__p"].to_numpy()
-                    _np.bitwise_or.at(
-                        bitmap,
-                        p // 8,
-                        _np.left_shift(1, p % 8).astype(_np.uint8),
-                    )
-                    return _pd.DataFrame(
-                        {
-                            "__f": [pdf["__f"].iloc[0]],
-                            "b": [
-                                _b64.b64encode(bitmap.tobytes()).decode(
-                                    "ascii"
-                                )
-                            ],
-                        }
-                    )
-
-                rows = (
-                    sub.where(F.col(col).isNotNull())
-                    .select(
-                        F.input_file_name().alias("__f"),
-                        F.explode(positions).alias("__p"),
-                    )
-                    .distinct()
-                    .groupBy("__f")
-                    .applyInPandas(_pack, "__f string, b string")
-                    .collect()
-                )
-                for r in rows:
-                    per_file.setdefault(to_rel(r["__f"]), {})[col] = {
-                        "m": m,
-                        "b": r["b"],
-                    }
+            for r in rows:
+                path = unquote(urlparse(r["f"]).path)
+                per_file.setdefault(os.path.relpath(path, root_abs), {})[
+                    col
+                ] = {"m": r["m"], "b": r["b"]}
         name = f"{version:012d}-{uuid.uuid4().hex[:8]}.bloom-0.json"
         d = self._manifest_dir()
         os.makedirs(d, exist_ok=True)
@@ -2296,14 +2280,17 @@ class VersionedParquetTable:
         return name
 
     def _load_bloom_files(self, bloom: dict) -> dict:
-        out: dict[str, dict[str, str]] = {}
+        """{file: (k, {column: {"m", "b"}})} over the listed sidecars."""
+        out: dict[str, tuple] = {}
         d = self._manifest_dir()
-        for name in bloom.get("sidecars", []):
+        for name in bloom["sidecars"]:
             try:
                 with open(os.path.join(d, name)) as f:
-                    out.update(json.load(f)["files"])
+                    side = json.load(f)
             except FileNotFoundError:
                 continue  # vacuumed sidecar: those files keep (no prune)
+            for rel, cols in side["files"].items():
+                out[rel] = (side["k"], cols)
         return out
 
     def _commit(
@@ -2315,36 +2302,46 @@ class VersionedParquetTable:
         operation: str,
         prior_stats: dict | None = None,
         delete_files: list[dict] | None = None,
-        bloom_cfg: dict | None = None,
-        bloom_new_files: list[str] | None = None,
-        bloom_carried: list[str] | None = None,
+        bloom_columns: list[str] | None = None,
         properties: dict | None = None,
     ) -> int:
+        """Publish a DATA commit of ``files``. The bloom config is
+        ``bloom_columns`` (None inherits the parent's); like
+        ``_epoch_state``, the files under this commit's
+        ``data/c{version}-`` prefix are the new ones: one sidecar covers
+        them, and of the parent's sidecars only those whose commit still
+        has a live file stay listed."""
         version = (parent or 0) + 1
+        p_root = self._load_root(parent) if parent is not None else {}
         # CHECK constraints ride every commit (Delta table-constraint
         # analog): inherit the parent's set; add/drop are their own
         # metadata-only commits.
-        cons = {}
-        if parent is not None:
-            cons = self._load_root(parent).get("constraints") or {}
+        cons = p_root.get("constraints") or {}
         stats, stat_types = self._collect_stats(files, df.schema, prior_stats)
+        p_bloom = p_root.get("bloom") or {}
+        if bloom_columns is None:
+            bloom_columns = p_bloom.get("columns")
         bloom = None
-        if bloom_cfg and bloom_cfg.get("columns"):
-            sidecars = list(bloom_carried or [])
+        if bloom_columns:
+            prefix = f"{_DATA_DIR}/c{version:012d}-"
+            live = {rel.split("/", 2)[1][1:13] for rel in files}
+            sidecars = [
+                s for s in p_bloom.get("sidecars", []) if s[:12] in live
+            ]
             name = self._build_bloom_sidecar(
-                bloom_new_files if bloom_new_files is not None else files,
-                bloom_cfg,
+                [rel for rel in files if rel.startswith(prefix)],
+                bloom_columns,
+                df.schema,
                 version,
             )
             if name:
                 sidecars.append(name)
-            bloom = {**bloom_cfg, "sidecars": sidecars}
+            bloom = {"columns": list(bloom_columns), "sidecars": sidecars}
         manifest = {
             "version": version,
             "parent": parent,
             "operation": operation,
             "partition_by": partition_by or [],
-            "schema": df.schema.jsonValue(),
             "files": files,
             "num_files": len(files),
             "stats": stats,
@@ -2447,7 +2444,6 @@ class VersionedParquetTable:
             if s != sid:
                 file_sids[rel] = s
         return {
-            "schema": new_json,
             "schema_id": sid,
             "schemas": schemas,
             "file_sids": file_sids,
@@ -2504,7 +2500,6 @@ class VersionedParquetTable:
                     "parent": parent,
                     "operation": "delete",
                     "partition_by": man["partition_by"],
-                    "schema": man["schema"],
                     "files": man["files"],
                     "num_files": man["num_files"],
                     "stats": man.get("stats", {}),
@@ -2533,39 +2528,25 @@ class VersionedParquetTable:
         partition_by: list[str] | None = None,
         operation: str = "overwrite",
         bloom_columns: list[str] | None = None,
-        bloom_bits: int = 1 << 16,
-        bloom_k: int = 4,
         properties: dict | None = None,
     ) -> int:
         """CREATE / INSERT OVERWRITE: a full new snapshot (old versions
         remain readable until vacuumed). ``bloom_columns`` opts the
-        table into per-file bloom sidecars for point-lookup pruning
-        (inherited by later merges; omit to keep the parent's
-        setting)."""
+        table into per-file bloom sidecars for point-lookup pruning:
+        one pass per commit, each file's bitmap sized from its own
+        distinct keys (see ``_build_bloom_sidecar``). Later commits
+        inherit the columns; omit them to keep the parent's setting,
+        pass ``[]`` to turn blooms off."""
         parent = self.latest_version()
-        bloom_cfg = None
         if parent is not None:
-            root = self._load_root(parent)
             if partition_by is None:
-                partition_by = root["partition_by"] or None
-            if bloom_columns is None and root.get("bloom"):
-                b = root["bloom"]
-                bloom_cfg = {
-                    "columns": b["columns"], "bits": b["bits"], "k": b["k"]
-                }
-        if bloom_columns:
-            bloom_cfg = {
-                "columns": list(bloom_columns),
-                "bits": bloom_bits,
-                "k": bloom_k,
-            }
-        if parent is not None:
+                partition_by = self._load_root(parent)["partition_by"] or None
             self._enforce_constraints(df, context="write")
         version = (parent or 0) + 1
         files = self._write_commit(df, version, partition_by)
         return self._commit(
             df, files, parent, partition_by, operation,
-            bloom_cfg=bloom_cfg, properties=properties,
+            bloom_columns=bloom_columns, properties=properties,
         )
 
     def append(self, df: DataFrame, properties: dict | None = None) -> int:
@@ -2607,7 +2588,7 @@ class VersionedParquetTable:
                 )
                 cons_checked = cons_now
             man = self._load_manifest(parent)
-            tgt = StructType.fromJson(man["schema"])
+            tgt = schema_from_json(man["schema"])
             want = [f.name for f in tgt.fields]
             missing = [c for c in want if c not in df.columns]
             extra = [c for c in df.columns if c not in want]
@@ -2624,7 +2605,6 @@ class VersionedParquetTable:
             spec = man["partition_by"] or None
             new_files = self._write_commit(aligned, parent + 1, spec)
             files = sorted(man["files"] + new_files)
-            b = man.get("bloom")
             try:
                 return self._commit(
                     aligned, files, parent, spec, "append",
@@ -2632,14 +2612,6 @@ class VersionedParquetTable:
                     # new files postdate every retained delete entry
                     # (same commit-version fencing as merge's carry)
                     delete_files=man.get("delete_files"),
-                    bloom_cfg=(
-                        {"columns": b["columns"], "bits": b["bits"],
-                         "k": b["k"]}
-                        if b
-                        else None
-                    ),
-                    bloom_new_files=new_files,
-                    bloom_carried=(b or {}).get("sidecars"),
                     properties=properties,
                 )
             except ConcurrentCommitError as e:
@@ -2823,7 +2795,7 @@ class VersionedParquetTable:
             if cons0:
                 self._enforce_constraints(
                     self.spark.read.schema(
-                        StructType.fromJson(root0["schema"])
+                        schema_from_json(root0["schema"])
                     ).parquet(*paths),
                     cons0,
                     context="add_files",
@@ -2852,7 +2824,7 @@ class VersionedParquetTable:
                     "partition fragment; append() lays out partitioned "
                     "data"
                 )
-            tgt = StructType.fromJson(man["schema"])
+            tgt = schema_from_json(man["schema"])
             want = [(f.name, _norm(f.dataType.simpleString())) for f in tgt.fields]
             for p, fs in file_schemas.items():
                 got = [
@@ -2865,8 +2837,7 @@ class VersionedParquetTable:
                         f"the table's current schema {want}; cast/"
                         "reorder columns before writing the file"
                     )
-            b = man.get("bloom")
-            if b and self.spark is None:
+            if man.get("bloom") and self.spark is None:
                 raise ValueError(
                     "add_files: table has a bloom sidecar config; "
                     "building sidecars is a Spark job — use a "
@@ -2902,14 +2873,6 @@ class VersionedParquetTable:
                     "append",
                     prior_stats=man.get("stats"),
                     delete_files=man.get("delete_files"),
-                    bloom_cfg=(
-                        {"columns": b["columns"], "bits": b["bits"],
-                         "k": b["k"]}
-                        if b
-                        else None
-                    ),
-                    bloom_new_files=rels,
-                    bloom_carried=(b or {}).get("sidecars"),
                     properties=properties,
                 )
             except ConcurrentCommitError as e:
@@ -2951,7 +2914,7 @@ class VersionedParquetTable:
             man = self._load_manifest(parent)
             new = list(partition_by or [])
             names = {
-                f.name for f in StructType.fromJson(man["schema"]).fields
+                f.name for f in schema_from_json(man["schema"]).fields
             }
             # entries may be transforms (hidden partitioning): validate
             # the parse AND that every SOURCE column exists
@@ -2973,7 +2936,6 @@ class VersionedParquetTable:
                     "parent": parent,
                     "operation": "evolve-spec",
                     "partition_by": new,
-                    "schema": man["schema"],
                     "files": man["files"],
                     "num_files": man["num_files"],
                     "stats": man.get("stats", {}),
@@ -3035,7 +2997,7 @@ class VersionedParquetTable:
             # unparseable/unresolvable expr fails HERE, not on the
             # next write
             empty = self.spark.createDataFrame(
-                [], StructType.fromJson(man["schema"])
+                [], schema_from_json(man["schema"])
             )
             empty.filter(F.expr(expr)).columns  # analysis only
             if validate:
@@ -3049,7 +3011,6 @@ class VersionedParquetTable:
                     "parent": parent,
                     "operation": "add-constraint",
                     "partition_by": man["partition_by"],
-                    "schema": man["schema"],
                     "files": man["files"],
                     "num_files": man["num_files"],
                     "stats": man.get("stats", {}),
@@ -3087,7 +3048,6 @@ class VersionedParquetTable:
                     "parent": parent,
                     "operation": "drop-constraint",
                     "partition_by": man["partition_by"],
-                    "schema": man["schema"],
                     "files": man["files"],
                     "num_files": man["num_files"],
                     "stats": man.get("stats", {}),
@@ -3255,7 +3215,6 @@ class VersionedParquetTable:
                 "parent": parent,
                 "operation": operation,
                 "partition_by": man["partition_by"],
-                "schema": new_schema,
                 "schema_id": new_sid,
                 "schemas": schemas,
                 "file_sids": {
@@ -3686,7 +3645,7 @@ class VersionedParquetTable:
                 affected_files = [
                     f for f in man["files"] if _is_affected(f)
                 ]
-                schema = StructType.fromJson(man["schema"])
+                schema = schema_from_json(man["schema"])
                 # Read ONLY the affected files (not the whole snapshot
                 # row-filtered): the scan is proportional to the churn,
                 # and old-spec files' rows ride along whole-file so the
@@ -3711,7 +3670,6 @@ class VersionedParquetTable:
                 dropped = set(affected_files)
                 carried = [f for f in man["files"] if f not in dropped]
                 files = sorted(carried + new_files)
-                b = man.get("bloom")
                 try:
                     return self._commit(
                         merged, files, parent, spec, "merge",
@@ -3720,13 +3678,6 @@ class VersionedParquetTable:
                         # rewritten files get a newer commit version and
                         # fall outside them (see delete_keys)
                         delete_files=man.get("delete_files"),
-                        bloom_cfg=(
-                            {"columns": b["columns"], "bits": b["bits"], "k": b["k"]}
-                            if b
-                            else None
-                        ),
-                        bloom_new_files=new_files,
-                        bloom_carried=(b or {}).get("sidecars"),
                         properties=properties,
                     )
                 except ConcurrentCommitError as e:
@@ -3742,18 +3693,12 @@ class VersionedParquetTable:
                 )
                 version = parent + 1
                 files = self._write_commit(merged, version, None)
-            b = man.get("bloom")
             try:
                 # unpartitioned merge rewrites every file, so parent
                 # delete entries are materialized — drop them (blooms
                 # recompute over the full rewrite)
                 return self._commit(
                     merged, files, parent, spec, "merge",
-                    bloom_cfg=(
-                        {"columns": b["columns"], "bits": b["bits"], "k": b["k"]}
-                        if b
-                        else None
-                    ),
                     properties=properties,
                 )
             except ConcurrentCommitError as e:
@@ -3822,7 +3767,7 @@ class VersionedParquetTable:
 
         def ddl(t) -> str:
             return (
-                StructType.fromJson(
+                schema_from_json(
                     {
                         "type": "struct",
                         "fields": [
@@ -4259,12 +4204,7 @@ class VersionedParquetTable:
                 {
                     **{
                         k: man[k]
-                        for k in (
-                            "partition_by",
-                            "schema",
-                            "files",
-                            "num_files",
-                        )
+                        for k in ("partition_by", "files", "num_files")
                     },
                     "version": self.latest_version() + 1,
                     "parent": self.latest_version(),
@@ -4335,7 +4275,6 @@ class VersionedParquetTable:
                 "parent": parent,
                 "operation": "rollback",
                 "partition_by": old["partition_by"],
-                "schema": old["schema"],
                 "files": old["files"],
                 "num_files": old["num_files"],
                 "stats": old.get("stats", {}),
@@ -4509,15 +4448,7 @@ class VersionedParquetTable:
             out = df.repartition(n_files)
         version = parent + 1
         files = self._write_commit(out, version, spec)
-        b = man.get("bloom")
-        return self._commit(
-            out, files, parent, spec, "compact",
-            bloom_cfg=(
-                {"columns": b["columns"], "bits": b["bits"], "k": b["k"]}
-                if b
-                else None
-            ),
-        )
+        return self._commit(out, files, parent, spec, "compact")
 
     def _spec_sized_repartition(
         self, df: DataFrame, spec: list[str], frag_n: dict[str, int]
@@ -4581,7 +4512,7 @@ class VersionedParquetTable:
         chosen = [f for f in man["files"] if sel(f)]
         if not chosen:
             return parent
-        schema = StructType.fromJson(man["schema"])
+        schema = schema_from_json(man["schema"])
         df = self._apply_deletes(
             self._read_files(chosen, schema, man), man
         )
@@ -4609,7 +4540,6 @@ class VersionedParquetTable:
         dropped = set(chosen)
         carried = [f for f in man["files"] if f not in dropped]
         files = sorted(carried + new_files)
-        b = man.get("bloom")
         return self._commit(
             out, files, parent, spec, "compact",
             prior_stats=man.get("stats"),
@@ -4617,13 +4547,6 @@ class VersionedParquetTable:
             # files' newer commit version exempts them (their
             # tombstones just materialized)
             delete_files=man.get("delete_files"),
-            bloom_cfg=(
-                {"columns": b["columns"], "bits": b["bits"], "k": b["k"]}
-                if b
-                else None
-            ),
-            bloom_new_files=new_files,
-            bloom_carried=(b or {}).get("sidecars"),
         )
 
     def vacuum(

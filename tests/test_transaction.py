@@ -948,6 +948,8 @@ def test_bloom_prunes_point_lookup_without_clustering(spark, table):
 
 
 def test_bloom_inherited_by_merge_and_carried_sidecars(spark, table):
+    from urllib.parse import unquote, urlparse
+
     df = spark.range(2000).select(
         F.col("id").alias("k"),
         (F.col("id") % 2).cast("string").alias("d"),
@@ -974,6 +976,25 @@ def test_bloom_inherited_by_merge_and_carried_sidecars(spark, table):
     probe = [("k", "=", 1501)]
     got = {r["k"] for r in table.read(predicate=probe).filter("k = 1501").collect()}
     assert got == {1501}
+    # a merge rewriting BOTH partitions leaves no file of v1 or v2
+    # live: only its own sidecar stays listed, and every key is found
+    v = table.merge(
+        spark.createDataFrame(
+            [Row(k=100001, d="0", v=1), Row(k=100002, d="1", v=1)]
+        ),
+        ["k"],
+    )
+    (sidecar,) = table._load_root(v)["bloom"]["sidecars"]
+    assert sidecar.startswith(f"{v:012d}-")
+    key_file = {
+        r["k"]: os.path.relpath(unquote(urlparse(r["f"]).path), table.path)
+        for r in table.read()
+        .select("k", F.input_file_name().alias("f"))
+        .collect()
+    }
+    assert len(key_file) == 2003
+    for key, rel in key_file.items():
+        assert rel in table.files_for(v, predicate=[("k", "=", key)]), key
     # compact recomputes blooms into a single fresh sidecar
     v = table.compact()
     root = table._load_root(v)
@@ -999,33 +1020,67 @@ def test_bloom_never_false_negative(spark, table):
 
 
 def test_bloom_sidecar_driver_bytes_flat_in_distinct_count(spark, tmp_path):
-    """Commit-time driver traffic for blooms is the PACKED bitmap
-    (m/8 bytes b64 per file), not the k*n_distinct position list: at a
-    fixed bitmap size, a file with 50x the distinct keys must produce a
-    byte-identical-SIZED sidecar entry (round-7 fix: executor-side
-    packing via applyInPandas)."""
+    """Each file's bitmap is sized from its own distinct keys: the
+    smallest power of two holding 10 bits per key. Files of 7,000 and
+    10,000 distinct keys both get m = 2^17 and equal-sized entries, a
+    200-key file gets 2^11, and every entry is the PACKED bitmap (m/8
+    bytes per file, not the k * n_distinct positions)."""
     import base64
     import json
     import os
 
-    sizes = {}
-    for name, n in (("small", 200), ("big", 10000)):
-        t = VersionedParquetTable(spark, str(tmp_path / name))
-        df = spark.range(n).select(F.col("id").alias("k"), F.col("id").alias("v"))
-        # one file, fixed m: 1<<17 bits covers 10k distinct at 10 bits/key
-        t.write(df.coalesce(1), bloom_columns=["k"], bloom_bits=1 << 17)
-        root = t._load_root(1)
-        sidecar = root["bloom"]["sidecars"][0]
-        with open(os.path.join(t._manifest_dir(), sidecar)) as f:
-            files = json.load(f)["files"]
-        (entry,) = [v["k"] for v in files.values()]
-        assert entry["m"] == 1 << 17
-        assert len(base64.b64decode(entry["b"])) == (1 << 17) // 8
-        sizes[name] = len(entry["b"])
-        # and the bloom still works: point lookup finds the key
-        got = {r["k"] for r in t.read(predicate=[("k", "=", n - 1)]).filter(F.col("k") == n - 1).collect()}
-        assert got == {n - 1}
-    assert sizes["small"] == sizes["big"]
+    t = VersionedParquetTable(spark, str(tmp_path / "sized"))
+    groups = {"a": (0, 200), "b": (200, 7200), "c": (7200, 17200)}
+    grp = F.when(F.col("id") < 200, "a").when(F.col("id") < 7200, "b")
+    df = spark.range(17200).select(
+        F.col("id").alias("k"), grp.otherwise("c").alias("g")
+    )
+    t.write(df.coalesce(1), partition_by=["g"], bloom_columns=["k"])
+    (sidecar,) = t._load_root(1)["bloom"]["sidecars"]
+    with open(os.path.join(t._manifest_dir(), sidecar)) as f:
+        files = json.load(f)["files"]
+    entries = {rel.split("__p_g=")[1][0]: v["k"] for rel, v in files.items()}
+    assert {g: e["m"] for g, e in entries.items()} == {
+        "a": 1 << 11, "b": 1 << 17, "c": 1 << 17,
+    }
+    for e in entries.values():
+        assert len(base64.b64decode(e["b"])) == e["m"] // 8
+    assert len(entries["b"]["b"]) == len(entries["c"]["b"])
+    # and the blooms still work: each file's last key is found
+    for g, (_lo, hi) in groups.items():
+        kept = t.files_for(predicate=[("k", "=", hi - 1)])
+        assert any(f"__p_g={g}/" in rel for rel in kept), g
+
+
+def test_bloom_build_runs_at_most_three_jobs(spark, tmp_path, monkeypatch):
+    """A commit's bloom sidecar is one grouped pass per bloom column:
+    writing 8 files with ``bloom_columns=["k"]`` spends at most 3 Spark
+    jobs building it (no approx-distinct pre-pass, no pass per bitmap
+    size)."""
+    sc = spark.sparkContext
+    build = VersionedParquetTable._build_bloom_sidecar
+    n_jobs = []
+
+    def counted(self, *args, **kwargs):
+        sc.setJobGroup("bloom_build", "bloom_build")
+        try:
+            return build(self, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            n_jobs.append(
+                len(sc.statusTracker().getJobIdsForGroup("bloom_build"))
+            )
+
+    monkeypatch.setattr(VersionedParquetTable, "_build_bloom_sidecar", counted)
+    t = VersionedParquetTable(spark, str(tmp_path / "jobs"))
+    df = spark.range(4000).select(
+        F.col("id").alias("k"), (F.col("id") % 5).alias("v")
+    )
+    t.write(df.orderBy(F.xxhash64("k")).repartition(8), bloom_columns=["k"])
+    assert len(t.files_for()) == 8
+    assert len(n_jobs) == 1 and n_jobs[0] <= 3, n_jobs
+    assert len(t.files_for(predicate=[("k", "=", 1234)])) == 1
 
 
 def test_driver_xxhash64_matches_spark(spark, tmp_path):
@@ -1163,6 +1218,35 @@ def test_probe_planning_runs_no_spark_job(spark, tmp_path):
     planned = t.read(predicate=[("k", "=", base + 392)])
     _, n_collect = jobs("probe_collect", planned.collect)
     assert n_lookup == n_collect
+
+
+def test_collated_bloom_column_survives_repeated_probes(spark, tmp_path):
+    """Parsing a manifest schema must not rewrite the cached root: on a
+    ``string collate UTF8_LCASE`` bloom column, repeated probes, a
+    constraint commit through the same handle and a fresh handle's
+    read all work, and the persisted schema keeps its collation."""
+    import json
+
+    path = str(tmp_path / "coll")
+    t = VersionedParquetTable(spark, path)
+    df = spark.range(40).select(
+        F.collate(F.col("id").cast("string"), "UTF8_LCASE").alias("c"),
+        F.col("id").alias("v"),
+    )
+    t.write(df.repartition(4), bloom_columns=["c"])
+    all_files = sorted(t.files_for())
+    for _ in range(3):  # collated strings are not driver-hashed: keep all
+        assert sorted(t.files_for(predicate=[("c", "=", "7")])) == all_files
+    v = t.add_check_constraint("v_nonneg", "v >= 0")
+    got = VersionedParquetTable(spark, path).read().filter("c = '7'")
+    assert _rows(got) == {("7", 7)}
+    with open(t._manifest_path(v)) as f:
+        man = json.load(f)
+    (c_field,) = [
+        f for f in man["schemas"][str(man["schema_id"])]["fields"]
+        if f["name"] == "c"
+    ]
+    assert c_field["metadata"]["__COLLATIONS"] == {"c": "spark.UTF8_LCASE"}
 
 
 # --- round 6: CDC apply (change feed -> replica) --------------------------
