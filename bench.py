@@ -7,6 +7,14 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is fully materialized via a count() over the final plan
 (touching every operator, no driver-side collect of big results).
+
+    python bench.py                               # every row
+    python bench.py s8_merge_upsert x_ivm_refresh # only these rows
+
+Naming rows times only those, with the same session, warm-ups,
+canaries and min-of-N protocol; the line then carries ``"subset"``
+and no ``BENCH_LOCAL_r{N}.json`` is written, since a partial run is
+no round record.
 """
 
 from __future__ import annotations
@@ -174,7 +182,19 @@ EXTENDED = [
 ]
 
 
-def main() -> None:
+def pick_rows(names) -> tuple[list[str], list[str]]:
+    """``(HEADLINE, EXTENDED)`` cut to ``names``, in their own order;
+    both whole when ``names`` is empty."""
+    if not names:
+        return HEADLINE, EXTENDED
+    unknown = sorted(set(names) - set(HEADLINE) - set(EXTENDED))
+    if unknown:
+        raise SystemExit(f"unknown bench rows: {', '.join(unknown)}")
+    return [n for n in HEADLINE if n in names], [n for n in EXTENDED if n in names]
+
+
+def main(names: list[str]) -> None:
+    headline, extended_rows = pick_rows(names)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from news_lakehouse_spark.queries import QUERIES
     from news_lakehouse_spark.session import build_session
@@ -280,9 +300,9 @@ def main() -> None:
     canary_sec = canaries["cpu"]
     print(f"# host canary: {canaries}", file=sys.stderr)
 
-    timings = time_queries(HEADLINE)
+    timings = time_queries(headline)
     total = round(sum(timings.values()), 3)
-    extended = time_queries(EXTENDED)
+    extended = time_queries(extended_rows)
 
     # Outlier auto-rerun (r10 verdict Next #7): the host shows a
     # recurring transient-stall class that concentrates on one query
@@ -371,6 +391,7 @@ def main() -> None:
         "operator_phases": __import__(
             "news_lakehouse_spark.queries", fromlist=["PHASE_TIMINGS"]
         ).PHASE_TIMINGS,
+        **({"subset": names} if names else {}),
         # cpu = the historical host_canary_sec series; scan_shuffle /
         # driver_meta model the IO- and metadata-bound query classes
         # the cpu canary proved blind to (r9 bisect, PLANS.md). Last
@@ -383,6 +404,8 @@ def main() -> None:
     # tail truncated the line and killed the round-over-round PERF
     # comparison — nothing may precede or follow it on stdout)
     print(json.dumps(payload), flush=True)
+    if names:
+        return
     # Also persist the FULL JSON in-repo: the driver records only the
     # last 2000 chars of stdout, which truncated BENCH_r06's headline
     # block — committed BENCH_LOCAL_r{N}.json keeps every round's
@@ -398,4 +421,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

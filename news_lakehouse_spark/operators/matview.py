@@ -120,21 +120,18 @@ class IncrementalAggView:
             return last
         # The feed plan (per-commit manifest diffs + exceptAll) appears
         # twice in the delta plan (signed agg + delete-group rescan
-        # semi-join) and merge() evaluates ITS source several times
-        # (key sets, affected partitions, the rewrite) — materialize
-        # both the O(churn) feed and the view-sized delta so neither
-        # plan re-derives the feed from table history per evaluation
-        # (lineage-truncated in local mode, recomputable persist on
-        # clusters — see transaction._materialize_churn).
+        # semi-join) — materialize the O(churn) feed so neither branch
+        # re-derives it from table history (lineage-truncated in local
+        # mode, recomputable persist on clusters — see
+        # transaction._materialize_churn). merge() materializes the
+        # view-sized delta, its source, itself.
         feed, rel_feed = _materialize_churn(source.changes(last, src_v))
         try:
-            updated, rel_upd = _materialize_churn(
-                self._apply_delta(feed, source, src_v)
+            self.table.merge(
+                self._apply_delta(feed, source, src_v),
+                self.group_by,
+                properties=props,
             )
-            try:
-                self.table.merge(updated, self.group_by, properties=props)
-            finally:
-                rel_upd()
         finally:
             rel_feed()
         return src_v
@@ -426,11 +423,8 @@ class IncrementalJoinAggView:
                 out.append(
                     F.when(alive, nn).otherwise(F.lit(0)).alias(f"nn_{c}")
                 )
-            updated, rel_upd = _materialize_churn(joined.select(*out))
-            try:
-                self.table.merge(updated, self.group_by, properties=props)
-            finally:
-                rel_upd()
+            # merge() materializes its source itself
+            self.table.merge(joined.select(*out), self.group_by, properties=props)
         finally:
             if rel_l is not None:
                 rel_l()

@@ -19,11 +19,13 @@ The MERGE_CARDINALITY_VIOLATION guard the reference implements with
 dropna+dropDuplicates before every merge (b2s:426-446) is enforced here
 by deduping the source on the merge keys first.
 
-These are pure DataFrame -> DataFrame rewrites. Materializing one is
-the table layer's job: ``VersionedParquetTable.merge``
-(sources/transaction.py) applies them to the affected files only and
-publishes the result as one atomic manifest commit. With small deltas
-Catalyst broadcasts the source side of the anti join automatically.
+These are pure DataFrame -> DataFrame rewrites that read their source
+more than once (the dedupe and the anti join). Materializing is the
+table layer's job: ``VersionedParquetTable.merge``
+(sources/transaction.py) materializes the source once, applies these
+rewrites to the affected files only and publishes the result as one
+atomic manifest commit. With small deltas Catalyst broadcasts the
+source side of the anti join automatically.
 """
 
 from __future__ import annotations

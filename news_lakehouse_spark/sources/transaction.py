@@ -350,13 +350,16 @@ def _footer_raw_stats(abs_path: str, stat_cols: tuple) -> dict:
 
 def _materialize_churn(df: DataFrame):
     """Materialize an O(churn) frame that several downstream actions
-    will consume; returns ``(frame, release)``.
+    will consume; returns ``(frame, release)``. It serves
+    ``VersionedParquetTable.merge``'s source and ``apply_changes``'
+    change feed.
 
     Local mode (no checkpoint dir): ``localCheckpoint(eager=True)`` —
     one job materializes the churn AND truncates its lineage, so every
-    later action (emptiness probes, merge key sets, the rewrite job)
-    plans against a flat in-memory RDD scan instead of re-analyzing
-    the full feed plan and re-running its AQE stage jobs. Cluster mode
+    later action (constraint check, emptiness probes, merge key sets,
+    the rewrite job) plans against a flat in-memory RDD scan instead of
+    re-analyzing the full plan and re-running its Python workers and
+    AQE stage jobs. Cluster mode
     (checkpoint dir configured, the 100 TB posture): a plain
     recomputable ``persist`` — localCheckpoint blocks are pinned to
     executors and one executor loss would fail the whole application,
@@ -3532,6 +3535,14 @@ class VersionedParquetTable:
         new manifest (no directory deletion needed). Returns the
         committed version.
 
+        The source is evaluated ONCE: merge materializes it
+        (``_materialize_churn``) before the constraint check and
+        releases it when the commit returns or raises, so the check,
+        every retry attempt, the affected-partition probe and the
+        rewrite's dedupe and anti join all read one flat in-memory
+        scan instead of re-running the caller's plan. Callers pass the
+        plain frame; none needs to materialize it first.
+
         ``churn_covers_partitions`` (the apply_changes fast path): a
         frame whose rows are guaranteed to cover every partition value
         this merge may touch — both where each source key is GOING and
@@ -3554,156 +3565,161 @@ class VersionedParquetTable:
             merge_upsert,
         )
 
-        cons_checked = self._constraints_at(self.latest_version())
-        self._enforce_constraints(source, cons_checked, context="merge")
-        last_err: Exception | None = None
-        for _attempt in range(retries + 1):
-            parent = self.latest_version()
-            # Revalidate when a concurrent add/drop_check_constraint
-            # won the race (same metadata-conflict rule as append).
-            cons_now = self._constraints_at(parent)
-            if cons_now != cons_checked:
-                self._enforce_constraints(
-                    source, cons_now,
-                    context="merge (constraints changed concurrently)",
-                )
-                cons_checked = cons_now
-            if parent is None:
-                merged = _guard_source(source, keys, order_by)
-                version = 1
-                files = self._write_commit(merged, version, partition_by)
-                try:
-                    return self._commit(
-                        merged, files, None, partition_by, "create",
-                        properties=properties,
+        source, release = _materialize_churn(source)
+        try:
+            cons_checked = self._constraints_at(self.latest_version())
+            self._enforce_constraints(source, cons_checked, context="merge")
+            last_err: Exception | None = None
+            for _attempt in range(retries + 1):
+                parent = self.latest_version()
+                # Revalidate when a concurrent add/drop_check_constraint
+                # won the race (same metadata-conflict rule as append).
+                cons_now = self._constraints_at(parent)
+                if cons_now != cons_checked:
+                    self._enforce_constraints(
+                        source, cons_now,
+                        context="merge (constraints changed concurrently)",
                     )
-                except ConcurrentCommitError as e:
-                    last_err = e
-                    continue
-
-            man = self._load_manifest(parent)
-            committed_spec = man["partition_by"] or None
-            if partition_by is not None and list(partition_by) != (
-                committed_spec or []
-            ):
-                # A spec passed here that differs from the manifest's
-                # is almost always a bug (the caller thinks the table
-                # is partitioned differently than it is). Evolving the
-                # spec is an explicit, metadata-only operation.
-                raise ValueError(
-                    f"merge partition_by={list(partition_by)} conflicts with "
-                    f"the committed partition spec {committed_spec or []}; "
-                    "use set_partition_spec() to evolve a table's "
-                    "partitioning"
-                )
-            spec = committed_spec
-            target = self.read(parent)
-
-            if spec:
-                fields = parse_partition_spec(spec)
-                if churn_covers_partitions is not None:
-                    # the caller's churn frame covers every affected
-                    # partition (see docstring): ONE O(churn) distinct,
-                    # no target scan
-                    parts = [
-                        r.asDict()
-                        for r in churn_covers_partitions.select(
-                            *spec_exprs(churn_covers_partitions, fields)
+                    cons_checked = cons_now
+                if parent is None:
+                    merged = _guard_source(source, keys, order_by)
+                    version = 1
+                    files = self._write_commit(merged, version, partition_by)
+                    try:
+                        return self._commit(
+                            merged, files, None, partition_by, "create",
+                            properties=properties,
                         )
-                        .distinct()
-                        .collect()
+                    except ConcurrentCommitError as e:
+                        last_err = e
+                        continue
+
+                man = self._load_manifest(parent)
+                committed_spec = man["partition_by"] or None
+                if partition_by is not None and list(partition_by) != (
+                    committed_spec or []
+                ):
+                    # A spec passed here that differs from the manifest's
+                    # is almost always a bug (the caller thinks the table
+                    # is partitioned differently than it is). Evolving the
+                    # spec is an explicit, metadata-only operation.
+                    raise ValueError(
+                        f"merge partition_by={list(partition_by)} conflicts with "
+                        f"the committed partition spec {committed_spec or []}; "
+                        "use set_partition_spec() to evolve a table's "
+                        "partitioning"
+                    )
+                spec = committed_spec
+                target = self.read(parent)
+
+                if spec:
+                    fields = parse_partition_spec(spec)
+                    if churn_covers_partitions is not None:
+                        # the caller's churn frame covers every affected
+                        # partition (see docstring): ONE O(churn) distinct,
+                        # no target scan
+                        parts = [
+                            r.asDict()
+                            for r in churn_covers_partitions.select(
+                                *spec_exprs(churn_covers_partitions, fields)
+                            )
+                            .distinct()
+                            .collect()
+                        ]
+                    else:
+                        # no distinct: a left_semi join never multiplies
+                        # target rows, and over the materialized source
+                        # the broadcast key list costs no shuffle job
+                        src_keys = source.dropna(subset=keys).select(*keys)
+                        # transform specs: probe the DERIVED partition
+                        # values (dict keys = field names, matching path
+                        # fragments). ONE distinct over the union — the
+                        # former per-side distincts fed a third
+                        # union-level distinct, paying two extra
+                        # aggregation stages per partitioned merge for
+                        # the same set (r12, guide §2.4).
+                        new_parts = source.select(*spec_exprs(source, fields))
+                        old_parts = target.join(
+                            F.broadcast(src_keys), on=keys, how="left_semi"
+                        ).select(*spec_exprs(target, fields))
+                        parts = [
+                            r.asDict()
+                            for r in new_parts.unionByName(old_parts)
+                            .distinct()
+                            .collect()
+                        ]
+                    # Affected files by fragment overlap: current-spec
+                    # files match their partition tuple exactly; old-spec
+                    # files (evolution) rewrite into the current spec when
+                    # they can't be proven disjoint — the incremental-
+                    # migration path, Iceberg-style: each merge converts
+                    # only the old-spec files it must touch, never the
+                    # whole table.
+                    _is_affected = _overlap_selector(self.spark, parts)
+                    affected_files = [
+                        f for f in man["files"] if _is_affected(f)
                     ]
+                    schema = schema_from_json(man["schema"])
+                    # Read ONLY the affected files (not the whole snapshot
+                    # row-filtered): the scan is proportional to the churn,
+                    # and old-spec files' rows ride along whole-file so the
+                    # rewrite under the current spec loses nothing.
+                    affected = (
+                        self._apply_deletes(
+                            self._read_files(affected_files, schema, man),
+                            man,
+                        )
+                        if affected_files
+                        else self.spark.createDataFrame([], schema)
+                    )
+                    merged = (
+                        merge_insert_only(affected, source, keys, evolve_schema=evolve_schema)
+                        if insert_only
+                        else merge_upsert(
+                            affected, source, keys, order_by, evolve_schema=evolve_schema
+                        )
+                    )
+                    version = parent + 1
+                    new_files = self._write_commit(merged, version, spec)
+                    dropped = set(affected_files)
+                    carried = [f for f in man["files"] if f not in dropped]
+                    files = sorted(carried + new_files)
+                    try:
+                        return self._commit(
+                            merged, files, parent, spec, "merge",
+                            prior_stats=man.get("stats"),
+                            # carried files still predate the delete entries;
+                            # rewritten files get a newer commit version and
+                            # fall outside them (see delete_keys)
+                            delete_files=man.get("delete_files"),
+                            properties=properties,
+                        )
+                    except ConcurrentCommitError as e:
+                        last_err = e  # loser of the race: re-derive from winner
+                        continue
                 else:
-                    src_keys = (
-                        source.dropna(subset=keys).select(*keys).distinct()
+                    merged = (
+                        merge_insert_only(target, source, keys, evolve_schema=evolve_schema)
+                        if insert_only
+                        else merge_upsert(
+                            target, source, keys, order_by, evolve_schema=evolve_schema
+                        )
                     )
-                    # transform specs: probe the DERIVED partition
-                    # values (dict keys = field names, matching path
-                    # fragments). ONE distinct over the union — the
-                    # former per-side distincts fed a third
-                    # union-level distinct, paying two extra
-                    # aggregation stages per partitioned merge for
-                    # the same set (r12, guide §2.4).
-                    new_parts = source.select(*spec_exprs(source, fields))
-                    old_parts = target.join(
-                        F.broadcast(src_keys), on=keys, how="left_semi"
-                    ).select(*spec_exprs(target, fields))
-                    parts = [
-                        r.asDict()
-                        for r in new_parts.unionByName(old_parts)
-                        .distinct()
-                        .collect()
-                    ]
-                # Affected files by fragment overlap: current-spec
-                # files match their partition tuple exactly; old-spec
-                # files (evolution) rewrite into the current spec when
-                # they can't be proven disjoint — the incremental-
-                # migration path, Iceberg-style: each merge converts
-                # only the old-spec files it must touch, never the
-                # whole table.
-                _is_affected = _overlap_selector(self.spark, parts)
-                affected_files = [
-                    f for f in man["files"] if _is_affected(f)
-                ]
-                schema = schema_from_json(man["schema"])
-                # Read ONLY the affected files (not the whole snapshot
-                # row-filtered): the scan is proportional to the churn,
-                # and old-spec files' rows ride along whole-file so the
-                # rewrite under the current spec loses nothing.
-                affected = (
-                    self._apply_deletes(
-                        self._read_files(affected_files, schema, man),
-                        man,
-                    )
-                    if affected_files
-                    else self.spark.createDataFrame([], schema)
-                )
-                merged = (
-                    merge_insert_only(affected, source, keys, evolve_schema=evolve_schema)
-                    if insert_only
-                    else merge_upsert(
-                        affected, source, keys, order_by, evolve_schema=evolve_schema
-                    )
-                )
-                version = parent + 1
-                new_files = self._write_commit(merged, version, spec)
-                dropped = set(affected_files)
-                carried = [f for f in man["files"] if f not in dropped]
-                files = sorted(carried + new_files)
+                    version = parent + 1
+                    files = self._write_commit(merged, version, None)
                 try:
+                    # unpartitioned merge rewrites every file, so parent
+                    # delete entries are materialized — drop them (blooms
+                    # recompute over the full rewrite)
                     return self._commit(
                         merged, files, parent, spec, "merge",
-                        prior_stats=man.get("stats"),
-                        # carried files still predate the delete entries;
-                        # rewritten files get a newer commit version and
-                        # fall outside them (see delete_keys)
-                        delete_files=man.get("delete_files"),
                         properties=properties,
                     )
                 except ConcurrentCommitError as e:
                     last_err = e  # loser of the race: re-derive from winner
-                    continue
-            else:
-                merged = (
-                    merge_insert_only(target, source, keys, evolve_schema=evolve_schema)
-                    if insert_only
-                    else merge_upsert(
-                        target, source, keys, order_by, evolve_schema=evolve_schema
-                    )
-                )
-                version = parent + 1
-                files = self._write_commit(merged, version, None)
-            try:
-                # unpartitioned merge rewrites every file, so parent
-                # delete entries are materialized — drop them (blooms
-                # recompute over the full rewrite)
-                return self._commit(
-                    merged, files, parent, spec, "merge",
-                    properties=properties,
-                )
-            except ConcurrentCommitError as e:
-                last_err = e  # loser of the race: re-derive from winner
-        raise last_err  # type: ignore[misc]
+            raise last_err  # type: ignore[misc]
+        finally:
+            release()
 
     def mirror_evolution_from(
         self,
@@ -4049,19 +4065,19 @@ class VersionedParquetTable:
         only — a sync cursor recorded this way (see ``sync_from``)
         never claims a partially-applied feed."""
         # The feed plan (per-commit manifest diffs + exceptAll +
-        # tombstone anti-joins) would otherwise recompute for EVERY
-        # downstream action — the emptiness probes, then the merge,
-        # which alone evaluates its source several times (key sets,
-        # affected partitions, the rewrite). The feed is O(churn) by
-        # construction, so materializing it once is always cheaper
-        # than re-deriving it from the table's history — and in local
-        # mode the materialization also TRUNCATES LINEAGE
-        # (localCheckpoint): every downstream action plans against a
-        # flat RDD scan instead of re-analyzing (and re-running AQE
-        # stage jobs over) the whole feed plan, which the r12 job
-        # profile showed costing more than the feed itself. Cluster
-        # mode keeps a recomputable persist: executor loss then
-        # recomputes the feed instead of failing the application.
+        # tombstone anti-joins) would otherwise recompute for each
+        # action below: the change-kind probe, delete_keys' dead-key
+        # set, and the merge's reads of the feed — the one
+        # materialization of its inserts (merge() materializes its own
+        # source) and its affected partitions (churn_covers_partitions).
+        # The feed is O(churn) by construction, so materializing it
+        # once is always cheaper than re-deriving it from the table's
+        # history — and in local mode the materialization also
+        # TRUNCATES LINEAGE (localCheckpoint): the actions plan against
+        # a flat RDD scan instead of re-analyzing (and re-running AQE
+        # stage jobs over) the whole feed plan. Cluster mode keeps a
+        # recomputable persist: executor loss then recomputes the feed
+        # instead of failing the application.
         feed, release = _materialize_churn(feed)
         try:
             inserts = feed.filter(F.col("_change_type") == "insert").drop(

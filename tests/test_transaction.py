@@ -1173,22 +1173,23 @@ def test_driver_xxhash64_matches_spark(spark, tmp_path):
     assert _rows(got.select("v")) == {(7,)}
 
 
+def _job_count(spark, group, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_probe_planning_runs_no_spark_job(spark, tmp_path):
     """Scan planning hashes probe keys on the driver: ``files_for`` on
     keys never probed before runs no Spark job for a bloom or a
     ``bucket(4, c)`` equality/IN predicate, and a point lookup runs
     only the jobs of its collect."""
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
     t = VersionedParquetTable(spark, str(tmp_path / "pj"))
     base = 5_000_000  # keys no other test probes
     df = spark.range(400).select(
@@ -1207,17 +1208,88 @@ def test_probe_planning_runs_no_spark_job(spark, tmp_path):
         ("bucket_eq", [("cust", "=", base + 11)]),
         ("bucket_in", [("cust", "in", [base + 3, base + 29])]),
     ]:
-        kept, n = jobs(f"probe_{name}", lambda: t.files_for(predicate=pred))
+        kept, n = _job_count(spark, f"probe_{name}", lambda: t.files_for(predicate=pred))
         assert n == 0, name
         assert 0 < len(kept) < len(all_files), name
-    got, n_lookup = jobs(
+    got, n_lookup = _job_count(
+        spark,
         "probe_lookup",
         lambda: t.read(predicate=[("k", "=", base + 391)]).collect(),
     )
     assert {r["v"] for r in got if r["k"] == base + 391} == {391}
     planned = t.read(predicate=[("k", "=", base + 392)])
-    _, n_collect = jobs("probe_collect", planned.collect)
+    _, n_collect = _job_count(spark, "probe_collect", planned.collect)
     assert n_lookup == n_collect
+
+
+def _merge_base(spark, t, case):
+    base = spark.createDataFrame(
+        [(k, "abc"[k % 3], k) for k in range(30)], "k long, d string, v long"
+    )
+    if case == "unpartitioned":
+        t.write(base.repartition(2))
+    else:
+        t.write(base.repartition(3), partition_by=["d"], bloom_columns=["k"])
+
+
+@pytest.mark.parametrize(
+    "case", ["partitioned_bloom", "unpartitioned", "insert_only", "duplicate_keys"]
+)
+def test_merge_evaluates_source_once(spark, tmp_path, case):
+    """merge() reads its source once: every source row passes through a
+    Python UDF that counts it, and after the merge the count equals the
+    source's row count (the constraint check, the partition probe and
+    the rewrite all read one materialization). Duplicate keys still
+    land as one row per key, rewriting only the affected partition."""
+    t = VersionedParquetTable(spark, str(tmp_path / case))
+    _merge_base(spark, t, case)
+    before = set(t._load_manifest(t.latest_version())["files"])
+    # keys 0, 3 and 300 sit in partition "a" (k % 3 == 0)
+    rows = [(0, "a", 100), (3, "a", 103), (300, "a", 400)]
+    if case == "duplicate_keys":
+        rows += [(0, "a", 50), (300, "a", 7)]
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(k):
+        seen.add(1)
+        return k
+
+    source = spark.createDataFrame(rows, "k long, d string, v long").withColumn(
+        "k", counted("k")
+    )
+    order_by = [F.col("v").desc()] if case == "duplicate_keys" else None
+    v = t.merge(source, ["k"], insert_only=case == "insert_only", order_by=order_by)
+    assert seen.value == len(rows)
+    got = {r["k"]: r["v"] for r in t.read(v).collect()}
+    assert len(got) == 31 and t.read(v).count() == 31
+    if case == "insert_only":
+        assert (got[0], got[3], got[300]) == (0, 3, 400)
+    else:
+        assert (got[0], got[3], got[300]) == (100, 103, 400)
+    assert got[1] == 1 and got[29] == 29
+    if case != "unpartitioned":
+        after = set(t._load_manifest(v)["files"])
+        # partitions b and c carry over; only a is rewritten
+        assert {f for f in before if "/__p_d=a/" not in f} <= after
+        assert not {f for f in before if "/__p_d=a/" in f} & after
+
+
+def test_partitioned_merge_job_bound(spark, tmp_path):
+    """Materializing the source inside merge() adds no Spark job over a
+    caller-materialized source: the checkpoint job pays for the probe
+    shuffle it removes. A partitioned, bloomed merge runs at most
+    MERGE_JOBS jobs, its count before merge() materialized its
+    source."""
+    MERGE_JOBS = 11
+    t = VersionedParquetTable(spark, str(tmp_path / "jobs"))
+    _merge_base(spark, t, "partitioned_bloom")
+    source = spark.createDataFrame(
+        [(0, "a", 100), (4, "b", 104), (300, "a", 400)], "k long, d string, v long"
+    ).localCheckpoint(eager=True)
+    v, n = _job_count(spark, "merge_jobs", lambda: t.merge(source, ["k"]))
+    assert n <= MERGE_JOBS, n
+    assert t.read(v).count() == 31
 
 
 def test_collated_bloom_column_survives_repeated_probes(spark, tmp_path):
