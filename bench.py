@@ -12,9 +12,10 @@ Each query is fully materialized via a count() over the final plan
     python bench.py s8_merge_upsert x_ivm_refresh # only these rows
 
 Naming rows times only those, with the same session, warm-ups,
-canaries and min-of-N protocol; the line then carries ``"subset"``
-and no ``BENCH_LOCAL_r{N}.json`` is written, since a partial run is
-no round record.
+canaries and min-of-N protocol; the line then names its metric
+``headline_queries_total_sec_subset`` and carries ``"subset"``, and no
+``BENCH_LOCAL_r{N}.json`` is written, since a partial run is no round
+record.
 """
 
 from __future__ import annotations
@@ -361,7 +362,9 @@ def main(names: list[str]) -> None:
     except ValueError:
         sf_val = sf
     payload = {
-        "metric": "headline_queries_total_sec",
+        # a subset's total sums only the named headline rows: its own
+        # metric name keeps it from being read as the round's total
+        "metric": "headline_queries_total_sec" + ("_subset" if names else ""),
         "value": total,
         "unit": "sec",
         # resolved parallelism evidence (r11 verdict #2): session.py

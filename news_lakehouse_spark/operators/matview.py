@@ -124,7 +124,7 @@ class IncrementalAggView:
         # re-derives it from table history (lineage-truncated in local
         # mode, recomputable persist on clusters — see
         # transaction._materialize_churn). merge() materializes the
-        # view-sized delta, its source, itself.
+        # view-sized delta, its source, wherever it reads it twice.
         feed, rel_feed = _materialize_churn(source.changes(last, src_v))
         try:
             self.table.merge(
@@ -423,7 +423,7 @@ class IncrementalJoinAggView:
                 out.append(
                     F.when(alive, nn).otherwise(F.lit(0)).alias(f"nn_{c}")
                 )
-            # merge() materializes its source itself
+            # merge() materializes its source wherever it reads it twice
             self.table.merge(joined.select(*out), self.group_by, properties=props)
         finally:
             if rel_l is not None:

@@ -22,10 +22,10 @@ by deduping the source on the merge keys first.
 These are pure DataFrame -> DataFrame rewrites that read their source
 more than once (the dedupe and the anti join). Materializing is the
 table layer's job: ``VersionedParquetTable.merge``
-(sources/transaction.py) materializes the source once, applies these
-rewrites to the affected files only and publishes the result as one
-atomic manifest commit. With small deltas Catalyst broadcasts the
-source side of the anti join automatically.
+(sources/transaction.py) materializes the source wherever it reads it
+more than once, applies these rewrites to the affected files only and
+publishes the result as one atomic manifest commit. With small deltas
+Catalyst broadcasts the source side of the anti join automatically.
 """
 
 from __future__ import annotations

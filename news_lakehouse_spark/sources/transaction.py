@@ -349,10 +349,12 @@ def _footer_raw_stats(abs_path: str, stat_cols: tuple) -> dict:
 
 
 def _materialize_churn(df: DataFrame):
-    """Materialize an O(churn) frame that several downstream actions
-    will consume; returns ``(frame, release)``. It serves
-    ``VersionedParquetTable.merge``'s source and ``apply_changes``'
-    change feed.
+    """Materialize a frame that several downstream actions will
+    consume; returns ``(frame, release)``. It serves
+    ``apply_changes``' change feed, which is O(churn), and
+    ``VersionedParquetTable.merge``'s source, which is whatever the
+    caller passes: a day's delta or a whole table's rows. Merge calls
+    it only on paths that read the source more than once.
 
     Local mode (no checkpoint dir): ``localCheckpoint(eager=True)`` —
     one job materializes the churn AND truncates its lineage, so every
@@ -3535,13 +3537,17 @@ class VersionedParquetTable:
         new manifest (no directory deletion needed). Returns the
         committed version.
 
-        The source is evaluated ONCE: merge materializes it
-        (``_materialize_churn``) before the constraint check and
-        releases it when the commit returns or raises, so the check,
-        every retry attempt, the affected-partition probe and the
-        rewrite's dedupe and anti join all read one flat in-memory
-        scan instead of re-running the caller's plan. Callers pass the
-        plain frame; none needs to materialize it first.
+        The source is evaluated ONCE. A create with no CHECK
+        constraints reads it once anyway (dedupe, then write) and
+        streams it straight to the writer. Every other path reads it
+        several times, so merge materializes it (``_materialize_churn``)
+        first: before the constraint check when the table has
+        constraints, else once it finds a parent to merge into. It is
+        released when the commit returns or raises. The check, every
+        retry attempt, the affected-partition probe and the rewrite's
+        dedupe and anti join then read one flat in-memory scan instead
+        of re-running the caller's plan. Callers pass the plain frame;
+        none needs to materialize it first.
 
         ``churn_covers_partitions`` (the apply_changes fast path): a
         frame whose rows are guaranteed to cover every partition value
@@ -3565,9 +3571,13 @@ class VersionedParquetTable:
             merge_upsert,
         )
 
-        source, release = _materialize_churn(source)
+        release = None
         try:
             cons_checked = self._constraints_at(self.latest_version())
+            if cons_checked:
+                # only a committed table has constraints: the check
+                # reads the source and the merge below reads it again
+                source, release = _materialize_churn(source)
             self._enforce_constraints(source, cons_checked, context="merge")
             last_err: Exception | None = None
             for _attempt in range(retries + 1):
@@ -3593,6 +3603,10 @@ class VersionedParquetTable:
                     except ConcurrentCommitError as e:
                         last_err = e
                         continue
+                if release is None:
+                    # the probe and the rewrite's dedupe and anti join
+                    # each read the source
+                    source, release = _materialize_churn(source)
 
                 man = self._load_manifest(parent)
                 committed_spec = man["partition_by"] or None
@@ -3719,7 +3733,8 @@ class VersionedParquetTable:
                     last_err = e  # loser of the race: re-derive from winner
             raise last_err  # type: ignore[misc]
         finally:
-            release()
+            if release is not None:
+                release()
 
     def mirror_evolution_from(
         self,
@@ -4067,9 +4082,9 @@ class VersionedParquetTable:
         # The feed plan (per-commit manifest diffs + exceptAll +
         # tombstone anti-joins) would otherwise recompute for each
         # action below: the change-kind probe, delete_keys' dead-key
-        # set, and the merge's reads of the feed — the one
-        # materialization of its inserts (merge() materializes its own
-        # source) and its affected partitions (churn_covers_partitions).
+        # set, and the merge's reads of the feed — its inserts (which
+        # merge() materializes itself when it reads them more than
+        # once) and its affected partitions (churn_covers_partitions).
         # The feed is O(churn) by construction, so materializing it
         # once is always cheaper than re-deriving it from the table's
         # history — and in local mode the materialization also

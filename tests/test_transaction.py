@@ -1275,6 +1275,32 @@ def test_merge_evaluates_source_once(spark, tmp_path, case):
         assert not {f for f in before if "/__p_d=a/" in f} & after
 
 
+def test_create_merge_streams_source(spark, tmp_path):
+    """A merge that creates its table reads the source once, straight
+    into the writer: it neither re-reads the source nor materializes
+    it first, so a table-sized initial load is stored only as parquet."""
+    sc = spark.sparkContext
+    held = set(sc._jsc.getPersistentRDDs().keys())
+    seen = sc.accumulator(0)
+
+    # nondeterministic, so the optimizer cannot copy the call into the
+    # key null-filter: each count is one read of a source row
+    @F.udf("long")
+    def counted(k):
+        seen.add(1)
+        return k
+
+    counted = counted.asNondeterministic()
+    source = spark.range(40).select(
+        counted("id").alias("k"), (F.col("id") % 3).cast("string").alias("d")
+    )
+    t = VersionedParquetTable(spark, str(tmp_path / "create"))
+    v = t.merge(source, ["k"], partition_by=["d"])
+    assert seen.value == 40
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= held
+    assert t.read(v).count() == 40
+
+
 def test_partitioned_merge_job_bound(spark, tmp_path):
     """Materializing the source inside merge() adds no Spark job over a
     caller-materialized source: the checkpoint job pays for the probe
